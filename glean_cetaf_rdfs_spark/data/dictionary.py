@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 ROR = "https://ror.org/"
 VIAF = "http://viaf.org/viaf/"
 
@@ -79,17 +81,19 @@ ENTITY_DICTIONARY: list[tuple[str, str, str | None, str | None, str | None, bool
     ("path_prefix", "id.snsb.example/collections", ROR + "05th1v540", "http://snsb.example", None, True),
 ]
 
-DICT_COLUMNS = ["match_kind", "match_key", "canonical_id", "umbrella", "publisher", "add_conforms_to"]
+DICT_SCHEMA = ("match_kind string, match_key string, canonical_id string, "
+               "umbrella string, publisher string, add_conforms_to boolean")
 
 # https→http scheme-canonical domains (P18, JACQ.sh:363-367)
 HTTP_SCHEME_DOMAINS = ["ipni.example", "purl.example", "isni.example"]
 
 
 def entity_dictionary_df(spark: SparkSession) -> DataFrame:
-    """The dictionary as a DataFrame — small enough that Catalyst
-    broadcast-joins it everywhere (reference codegens it into sed blocks;
-    we broadcast it, SURVEY.md §2.3 J1)."""
-    return spark.createDataFrame(ENTITY_DICTIONARY, schema=DICT_COLUMNS)
+    """The dictionary as a local-relation DataFrame — small enough that
+    Catalyst broadcast-joins it everywhere (reference codegens it into
+    sed blocks; we broadcast it, SURVEY.md §2.3 J1). Building the
+    broadcast reads the driver-held rows; no Python worker runs."""
+    return local_frame(spark, ENTITY_DICTIONARY, DICT_SCHEMA)
 
 
 def domain_rules() -> dict[str, tuple[str | None, str | None, str | None, bool]]:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dedup(e: DataFrame) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
@@ -91,7 +93,7 @@ def _cc_driver(e: DataFrame, rows=None) -> DataFrame:
     nodes = set(parent)
     nodes.update(find(x) for x in list(parent))
     mapping = [(x, find(x)) for x in sorted(nodes)]
-    return spark.createDataFrame(mapping, schema=schema)
+    return local_frame(spark, mapping, schema)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,

@@ -4,7 +4,7 @@ conditional literal rule (J2) as broadcast hash joins.
 The reference codegens its dictionary into ~380 lines of per-institution
 sed address blocks (convertRDF4import_normal-files_JACQ.sh:434-812,
 generated by generate_sed-expr4ROR-id.sh:98-169). Here the dictionary is a
-~40-row DataFrame broadcast to every task.
+~40-row local-relation DataFrame broadcast to every task.
 
 Longest-prefix matching is executed as **priority broadcast left-joins**:
 one candidate-key column per path depth (domain, domain/s1, …, deepest
@@ -68,9 +68,9 @@ def link_entities(triples: DataFrame, dict_df: DataFrame | None = None) -> DataF
     if dict_df is None:
         dict_df = entity_dictionary_df(spark)
         # the literal-rule domain list comes straight from the static
-        # dictionary: the ``distinct().collect()`` below is a whole
-        # Spark job executed at PLAN-BUILD time, paid once per pipeline
-        # construction (every bench/scaling run, every q32) for a list
+        # dictionary. The default dictionary is a local relation, but the
+        # ``distinct().collect()`` below would still run an aggregate job
+        # at PLAN-BUILD time, once per pipeline construction, for a list
         # already sitting in driver memory
         from ..data.dictionary import ENTITY_DICTIONARY
 

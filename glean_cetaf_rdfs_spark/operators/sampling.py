@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def hash_bucket(id_col: Column, salt: str = "", n_buckets: int = 1000) -> Column:
     """Deterministic bucket in [0, n_buckets): first 8 md5 hex chars of
@@ -43,8 +45,8 @@ def sample_stratified(df: DataFrame, id_col: str, strata_col: str,
     deterministically (see module docstring). Strata absent from the
     dict are dropped (rate 0). Returns the input schema unchanged."""
     spark = df.sparkSession
-    rates = spark.createDataFrame(
-        [(k, int(v)) for k, v in sorted(rates_permille.items())],
+    rates = local_frame(
+        spark, [(k, int(v)) for k, v in sorted(rates_permille.items())],
         f"{strata_col} string, _permille int")
     bucket = hash_bucket(F.col(id_col), salt)
     return (df.join(F.broadcast(rates), strata_col)

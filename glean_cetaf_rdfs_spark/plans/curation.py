@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.piiscan import pii_gate
 from ..operators.spandedup import remove_repeated_spans
 from ..operators.textops import quality_counts
+from ..session import local_frame
 
 
 # md5(NULL) is NULL; a NULL fingerprint would fall out of the equi-join
@@ -168,8 +169,8 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         row01 = (fp.agg(F.count(F.lit(1)).alias("n"))
                  .select(F.lit("01_pii_clean").alias("stage"), "n"))
     elif obs01 is not None:
-        row01 = spark.createDataFrame(
-            [("01_pii_clean", int(obs01.get["n"]))], "stage string, n long")
+        row01 = local_frame(spark, [("01_pii_clean", int(obs01.get["n"]))],
+                            "stage string, n long")
     else:
         row01 = (pii_clean.agg(F.count(F.lit(1)).alias("n"))
                  .select(F.lit("01_pii_clean").alias("stage"), "n"))
@@ -214,7 +215,7 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
     curated, funnel = curate_corpus(docs, **curate_kwargs)
     curated.write.mode("overwrite").partitionBy("source").parquet(out_path)
     if lineage_path is not None:
-        from ..streaming.checkpoint import _append_ckpt
+        from ..streaming.checkpoint import append_lineage
 
         f = {r["stage"]: r["n"] for r in funnel.collect()}
         # consecutive count-stage pairs become lineage rows; the two
@@ -228,14 +229,14 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
                  ("00_input", "01_pii_clean", "01b_decontaminated",
                   "02_unique", "04_quality_pass", "05_repetition_pass")
                  if s in f]
+        rows = []
         for (_, n0), (s1, n1) in zip(chain, chain[1:]):
-            _append_ckpt(spark, lineage_path, run_id, stage_names[s1],
-                         "all", n0, n1, n0 - n1, "done")
+            rows.append((stage_names[s1], "all", n0, n1, n0 - n1))
             if s1 == "02_unique":
                 # span rewrite preserves rows; its token accounting
                 # lives in the funnel/q51
-                _append_ckpt(spark, lineage_path, run_id, "span_rewrite",
-                             "all", n1, n1, 0, "done")
+                rows.append(("span_rewrite", "all", n1, n1, 0))
+        append_lineage(spark, lineage_path, run_id, rows)
     return spark.read.parquet(out_path)
 
 

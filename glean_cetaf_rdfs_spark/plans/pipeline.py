@@ -215,27 +215,24 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
         final = final.observe(obs_final, F.count(F.lit(1)).alias("n"))
     write_graph_table(final, out_path)
     if lineage_path is not None:
-        from ..streaming.checkpoint import _append_ckpt
+        from ..streaming.checkpoint import append_lineage
 
         canon = metrics["canon"].get
         n_in, n_p4, n_p5 = int(canon["n_in"]), int(canon["n_p4"]), int(canon["n_p5"])
-        # gate stage: rows_in = turns seen, rows_out = turns passed
-        # (observed on the stage-table write — no extra scan). Written
-        # unconditionally — rows_dropped=0 on a clean run — so lineage
-        # consumers can distinguish "gate ran, zero quarantined" from
-        # "gate absent" (the reference's validateRDFs tally likewise
-        # emits a row regardless of the count).
+        # gate: rows_in = turns seen, rows_out = turns passed (observed on
+        # the stage-table write — no extra scan). Written even on a clean
+        # run (rows_dropped=0) so lineage consumers can tell "gate ran,
+        # zero quarantined" from "gate absent", as the reference's
+        # validateRDFs tally emits a row regardless of the count.
         n_ok = int(obs_gate.get["n"])
-        _append_ckpt(spark, lineage_path, run_id, "gate", "all",
-                     n_ok + n_bad, n_ok, n_bad, "done")
-        _append_ckpt(spark, lineage_path, run_id, "extract_canonicalize", "all",
-                     n_in, n_in - n_p4 - n_p5, n_p4 + n_p5, "done")
         # materialize's true input is the pre-dedupe union (canonical +
         # sameAs + generated rows — observed on the same write action);
-        # dropped = in − out keeps the rows_in == rows_out + rows_dropped
-        # invariant the extract_canonicalize row establishes
+        # dropped = in − out keeps rows_in == rows_out + rows_dropped
         n_mat_in = int(metrics["pre_final"].get["n"])
         n_final = int(obs_final.get["n"])
-        _append_ckpt(spark, lineage_path, run_id, "materialize", "all",
-                     n_mat_in, n_final, n_mat_in - n_final, "done")
+        append_lineage(spark, lineage_path, run_id, [
+            ("gate", "all", n_ok + n_bad, n_ok, n_bad),
+            ("extract_canonicalize", "all", n_in, n_in - n_p4 - n_p5, n_p4 + n_p5),
+            ("materialize", "all", n_mat_in, n_final, n_mat_in - n_final),
+        ])
     return spark.read.parquet(out_path)

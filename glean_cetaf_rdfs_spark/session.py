@@ -12,7 +12,8 @@ import os
 import sys
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # repo root (parent of this package) — shipped to Python workers so the
 # extraction UDFs can unpickle package functions regardless of the
@@ -69,12 +70,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[N]`` with N = ``$SPARK_GRAFT_CPUS``,
+    else the cores this process may run on (``sched_getaffinity``).
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster this would be ~2-3× total executor cores; AQE coalesces down.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "4"
@@ -129,3 +131,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str | StructType) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` order; ``schema`` a DDL
+    string or StructType) as a DataFrame planned as a ``LocalTableScan``.
+
+    The rows cross to the JVM once, as one Arrow table.
+    ``spark.createDataFrame(list)`` instead parallelizes the list into a
+    ``PythonRDD``: every action on it runs a Python-worker job, which on
+    a few-row lineage or dictionary frame costs more than the rows.
+    Naive datetimes are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 from ..plans.pipeline import build_triples
+from ..session import local_frame
 
 CKPT_SCHEMA = ("run_id string, stage string, partition_key string, "
                "rows_in long, rows_out long, rows_dropped long, "
@@ -40,15 +41,17 @@ def bucket_of(conv_id_col, n_buckets: int):
 def read_checkpoint(spark: SparkSession, ckpt_path: str) -> DataFrame:
     if os.path.exists(ckpt_path):
         return spark.read.parquet(ckpt_path)
-    return spark.createDataFrame([], schema=CKPT_SCHEMA)
+    return local_frame(spark, [], CKPT_SCHEMA)
 
 
-def _append_ckpt(spark: SparkSession, ckpt_path: str, run_id: str, stage: str,
-                 key: str, rows_in: int, rows_out: int, dropped: int,
-                 status: str) -> None:
-    row = [(run_id, stage, key, rows_in, rows_out, dropped, status,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None))]
-    spark.createDataFrame(row, schema=CKPT_SCHEMA).write.mode("append").parquet(ckpt_path)
+def append_lineage(spark: SparkSession, ckpt_path: str, run_id: str,
+                   rows: list[tuple[str, str, int, int, int]]) -> None:
+    """Append a run's finished stages — ``(stage, partition_key,
+    rows_in, rows_out, rows_dropped)`` each — as ``done`` rows stamped
+    with the current UTC time, in one single-file write."""
+    now = dt.datetime.now(dt.timezone.utc)
+    (local_frame(spark, [(run_id, *r, "done", now) for r in rows], CKPT_SCHEMA)
+     .coalesce(1).write.mode("append").parquet(ckpt_path))
 
 
 def done_buckets(spark: SparkSession, ckpt_path: str, run_id: str) -> set[int]:
@@ -96,8 +99,8 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
          .parquet(f"{out_path}/bucket={b}"))
         rows_in = int(obs_in.get["n"])
         rows_out = int(obs_out.get["n"])
-        _append_ckpt(spark, ckpt_path, run_id, "materialize", str(b),
-                     rows_in, rows_out, 0, "done")
+        append_lineage(spark, ckpt_path, run_id,
+                       [("materialize", str(b), rows_in, rows_out, 0)])
         completed += 1
         if fail_after_bucket is not None and completed >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {b}")

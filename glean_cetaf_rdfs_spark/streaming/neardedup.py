@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cc import connected_components
 from ..operators.dedupe import band_signatures
+from ..session import local_frame
 
 BAND_STORE_SCHEMA = "band int, band_sig string, epoch long"
 
@@ -69,7 +70,7 @@ def read_band_store(spark: SparkSession, path: str) -> DataFrame:
     try:
         return spark.read.parquet(path)
     except AnalysisException:
-        return spark.createDataFrame([], schema=BAND_STORE_SCHEMA)
+        return local_frame(spark, [], BAND_STORE_SCHEMA)
 
 
 def compact_band_store(spark: SparkSession, path: str, upto_epoch: int,

@@ -214,3 +214,78 @@ def test_main_one_leg_death_keeps_other_leg(monkeypatch, capsys):
     assert res["low"]["triples_per_sec"] == 10.0
     assert res["high"]["wall_sec"] is None
     assert "hi TimeoutExpired" in res["error"]
+
+
+def test_measure_leg_rebatch_gate_respects_run_level_floor(monkeypatch):
+    """The re-batch gate needs max(300, 2.5 × min wall) of budget: with
+    250 s of re-batch cost but under 300 s left, run_level would refuse
+    the attempt, so measure_leg must not start it."""
+    import time
+
+    calls = []
+
+    def fake_level(cores, n_convs, runs, deadline=None):
+        calls.append(runs)
+        return {"cores": cores, "n_triples": 10, "n_turns": 1,
+                "wall_sec": 100.0, "walls": [100.0, 200.0],
+                "triples_per_sec": 0.1, "turns_per_sec": 0.01}
+
+    monkeypatch.setattr(BS, "run_level", fake_level)
+    m = BS.measure_leg(2, 1000, 2, deadline=time.monotonic() + 280)
+    assert len(calls) == 1
+    assert m["walls"] == [100.0, 200.0]
+
+
+def test_measure_leg_rebatch_failure_keeps_walls(monkeypatch):
+    """A re-batch that raises (near-deadline refusal, hung leg) returns
+    the walls already measured instead of discarding the leg."""
+    import time
+
+    calls = []
+
+    def fake_level(cores, n_convs, runs, deadline=None):
+        calls.append(runs)
+        if len(calls) > 1:
+            raise subprocess.TimeoutExpired(["leg"], 42)
+        return {"cores": cores, "n_triples": 10, "n_turns": 1,
+                "wall_sec": 1.0, "walls": [1.0, 2.0],
+                "triples_per_sec": 10.0, "turns_per_sec": 1.0}
+
+    monkeypatch.setattr(BS, "run_level", fake_level)
+    m = BS.measure_leg(2, 1000, 2, deadline=time.monotonic() + 10_000)
+    assert len(calls) == 2
+    assert m["walls"] == [1.0, 2.0] and m["wall_sec"] == 1.0
+    assert "TimeoutExpired" in m["rebatch_error"]
+
+
+def test_main_remeasure_failure_keeps_both_legs(monkeypatch, capsys):
+    """An under-target pair triggers the interleaved re-measure; when
+    that raises, the final line still carries both measured legs and
+    the error instead of main() crashing with nothing printed."""
+    import sys
+
+    calls = []
+    legs = {2: {"cores": 2, "n_turns": 1, "n_triples": 10, "wall_sec": 1.0,
+                "walls": [1.0, 1.0], "triples_per_sec": 10.0,
+                "turns_per_sec": 1.0},
+            8: {"cores": 8, "n_turns": 1, "n_triples": 10, "wall_sec": 0.5,
+                "walls": [0.5, 0.5], "triples_per_sec": 20.0,
+                "turns_per_sec": 2.0}}
+
+    def fake_measure(cores, n_convs, runs, deadline, **kw):
+        calls.append(cores)
+        if len(calls) > 2:
+            raise subprocess.TimeoutExpired(["leg"], 42)
+        return dict(legs[cores])
+
+    monkeypatch.setattr(BS, "measure_leg", fake_measure)
+    monkeypatch.setattr(BS.subprocess, "run",
+                        lambda *a, **k: subprocess.CompletedProcess(a, 0))
+    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "480000", "2", "2", "4"])
+    BS.main()
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert calls == [8, 2, 2]  # hi, lo, then the failed lo re-measure
+    assert res["low"]["walls"] == [1.0, 1.0]
+    assert res["high"]["walls"] == [0.5, 0.5]
+    assert res["scaling_efficiency"] == 0.5 and res["pass"] is False
+    assert "re-measure TimeoutExpired" in res["error"]

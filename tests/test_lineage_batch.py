@@ -93,3 +93,52 @@ def test_run_pipeline_gates_malformed_input(spark, tiny_df, tmp_path):
     g = rows["gate"]
     assert g["rows_dropped"] == 2
     assert g["rows_in"] == g["rows_out"] + g["rows_dropped"]
+
+
+def _data_files(path: str) -> int:
+    return len(glob.glob(f"{path}/*.parquet"))
+
+
+def test_one_lineage_write_per_run(spark, tiny_df, tmp_path):
+    """Each run appends its stage rows in ONE write (one data file), and
+    ``updated_ts`` reads back as the current UTC time through both
+    pyarrow and Spark (the tz-aware → Arrow path)."""
+    import datetime as dt
+
+    import pyarrow.dataset as ds
+
+    from glean_cetaf_rdfs_spark.plans.curation import run_curation
+
+    ck = str(tmp_path / "lineage")
+    for n in (1, 2):
+        run_pipeline(spark, tiny_df, str(tmp_path / "g"), lineage_path=ck,
+                     run_id=f"p{n}")
+        assert _data_files(ck) == n
+    assert spark.read.parquet(ck).count() == 6
+
+    docs = spark.createDataFrame(
+        [(1, "s0", "alpha beta gamma delta epsilon zeta eta"),
+         (2, "s0", "alpha beta gamma delta epsilon zeta eta")],
+        "doc_id long, source string, text string")
+    run_curation(spark, docs, str(tmp_path / "corpus"), lineage_path=ck)
+    assert _data_files(ck) == 3
+    assert spark.read.parquet(ck).filter(F.col("run_id") == "curate").count() == 4
+
+    now = dt.datetime.now(dt.timezone.utc)
+    for ts in ds.dataset(ck, format="parquet").to_table().column("updated_ts").to_pylist():
+        ts = ts if ts.tzinfo else ts.replace(tzinfo=dt.timezone.utc)
+        assert abs((now - ts).total_seconds()) < 120
+    lag = (spark.read.parquet(ck)
+           .agg(F.max(F.abs(F.unix_timestamp(F.current_timestamp())
+                            - F.unix_timestamp("updated_ts")))).first()[0])
+    assert lag < 120
+
+
+def test_resumable_lineage_one_row_per_bucket(spark, tiny_df, tmp_path):
+    ck = str(tmp_path / "ck")
+    run_resumable(spark, tiny_df, str(tmp_path / "bkt"), ck, run_id="b1",
+                  n_buckets=3)
+    rows = spark.read.parquet(ck).collect()
+    assert sorted(r["partition_key"] for r in rows) == ["0", "1", "2"]
+    assert {r["stage"] for r in rows} == {"materialize"}
+    assert _data_files(ck) == 3
