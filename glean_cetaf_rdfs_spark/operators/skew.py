@@ -1,92 +1,43 @@
-"""Skew-handling utilities: salted aggregation and salted broadcast-side
-join — the engine's explicit answer to hot keys (the reference randomizes
-harvest order with ``shuf`` for the same reason, get_RDF4domain…:488;
-north rule: "skew from hot entities and long conversations is handled
-with salted repartitioning").
+"""Skew handling: salted two-phase aggregation — the engine's explicit
+answer to hot keys (the reference randomizes harvest order with ``shuf``
+for the same reason, get_RDF4domain…:488; north rule: "skew from hot
+entities and long conversations is handled with salted
+repartitioning").
 
 When to use which:
-* hot GROUP BY keys → :func:`salted_count` / the two-phase pattern: add a
-  deterministic salt, pre-aggregate on (key, salt), then merge — the hot
-  key's rows spread over ``n_salts`` reducers. (Spark's map-side partial
-  aggregation already does this for algebraic aggregates; the explicit
-  form matters for exact-distinct style aggregations.)
-* hot JOIN keys, big×small → replicate the small side per salt
-  (:func:`salted_join_small`) so each hot-key shard joins locally.
-* hot JOIN keys, big×big → leave to AQE skew-join (enabled in the
-  session); salting both sides multiplies data.
+* hot GROUP BY keys → :func:`salted_count`: add a deterministic salt,
+  pre-aggregate on (key, salt), then merge — the hot key's rows spread
+  over ``n_salts`` reducers. (Spark's map-side partial aggregation
+  already does this for algebraic aggregates; the explicit form matters
+  for exact-distinct style aggregations.)
+* hot JOIN keys → broadcast the small side where it fits, and leave
+  big×big to AQE skew-join (enabled in the session); salting both sides
+  multiplies data.
 
-Salts are deterministic (hash of a sibling column), never random — reruns
-must be idempotent (checkpoint/resume contract).
+Salts are deterministic (a hash of the row content), never random —
+reruns must be idempotent (checkpoint/resume contract).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, salt_from: Column, n_salts: int = 16,
-              col_name: str = "_salt") -> DataFrame:
-    return df.withColumn(col_name, F.pmod(F.xxhash64(salt_from), F.lit(n_salts)))
+def with_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
+    """Add ``_salt`` in [0, n_salts): a pure hash of the full row
+    content. Deterministic, so task-level retries re-route every row
+    identically (Spark's indeterminate-stage rollback is only
+    guaranteed for repartition-style plans, not for nondeterministic
+    expressions feeding aggregation keys). Byte-identical duplicates of
+    a hot key therefore share one shard."""
+    row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
+    return df.withColumn("_salt", F.pmod(row_hash, F.lit(n_salts)))
 
 
-def _stable_salt_src(df: DataFrame, spread_duplicates: bool = False) -> Column:
-    """Salt source: by DEFAULT a pure hash of the full row content —
-    deterministic, so task-level retries re-route every row identically
-    and the module's documented idempotent-routing contract holds on a
-    real cluster (Spark's indeterminate-stage rollback is only
-    guaranteed for repartition-style plans, not arbitrary
-    nondeterministic expressions feeding join/agg keys).
-
-    ``spread_duplicates=True`` additionally MIXES the row's position
-    (monotonically_increasing_id) into the hash so byte-identical
-    duplicates of a hot key fan out across shards instead of piling into
-    one. This is an explicit opt-in for known duplicate-heavy skew: the
-    position term is flagged nondeterministic by Catalyst, and a
-    fetch-failure that recomputes part of a map stage can re-route rows
-    mid-shuffle, double-counting or dropping them unless Spark widens
-    the retry to the whole stage. Final results are salt-invariant under
-    CONSISTENT routing either way; only the opt-in risks inconsistent
-    routing under partial recomputation."""
-    cols = [F.col(c) for c in df.columns]
-    if spread_duplicates:
-        return F.xxhash64(*cols, F.monotonically_increasing_id())
-    return F.xxhash64(*cols)
-
-
-def salted_count(df: DataFrame, key: str, n_salts: int = 16,
-                 salt_from: Column | None = None,
-                 spread_duplicates: bool = False) -> DataFrame:
+def salted_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     """groupBy(key).count() in two phases for skewed keys:
-    (key, salt) partial counts → merge. → (key, n).
-    ``spread_duplicates``: see :func:`_stable_salt_src`."""
-    salt_src = (salt_from if salt_from is not None
-                else _stable_salt_src(df, spread_duplicates))
-    salted = with_salt(df, salt_src, n_salts)
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_n"))
+    (key, salt) partial counts → merge. → (key, n)."""
+    partial = (with_salt(df, n_salts).groupBy(key, "_salt")
+               .agg(F.count(F.lit(1)).alias("_n")))
     return partial.groupBy(key).agg(F.sum("_n").alias("n"))
-
-
-def salted_distinct(df: DataFrame, key: str, payload: str,
-                    n_salts: int = 16) -> DataFrame:
-    """distinct (key, payload) for skewed keys: dedupe within (key, salt)
-    shards first (salt = hash of payload → same pair always lands in the
-    same shard, so shard-local dedupe is exact), then globally.
-    → distinct (key, payload)."""
-    salted = with_salt(df, F.col(payload), n_salts)
-    local = salted.dropDuplicates([key, payload, "_salt"]).drop("_salt")
-    return local.dropDuplicates([key, payload])
-
-
-def salted_join_small(big: DataFrame, small: DataFrame, key: str,
-                      n_salts: int = 16, how: str = "inner",
-                      spread_duplicates: bool = False) -> DataFrame:
-    """big ⋈ small on a skewed key: salt the big side, replicate the
-    small side once per salt, join on (key, salt). The hot key's rows
-    spread across n_salts tasks instead of one straggler.
-    ``spread_duplicates``: see :func:`_stable_salt_src`."""
-    spark = big.sparkSession
-    salts = spark.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
-    big_s = with_salt(big, _stable_salt_src(big, spread_duplicates), n_salts)
-    small_s = small.crossJoin(F.broadcast(salts))
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")

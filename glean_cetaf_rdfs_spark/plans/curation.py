@@ -1,6 +1,6 @@
 """End-to-end corpus-curation plan — the training-data analog of the KG
 ``build_triples`` plan (plans/pipeline.py): compose the curation
-operators into ONE lazy DataFrame funnel
+operators into ONE DataFrame funnel
 
     input docs
       → PII gate           (operators/piiscan.pii_gate — quarantine split)
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.piiscan import pii_gate
 from ..operators.spandedup import remove_repeated_spans
 from ..operators.textops import quality_counts
-from ..session import local_frame
+from ..session import local_frame, stage_scratch_path
 
 
 # md5(NULL) is NULL; a NULL fingerprint would fall out of the equi-join
@@ -52,8 +52,6 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                   max_punct_permille: int = 100,
                   contamination_canaries: list[str] | None = None,
                   repetition_thresholds: dict[str, float] | None = None,
-                  intermediate: str = "parquet",
-                  temp_dir: str | None = None,
                   ) -> tuple[DataFrame, DataFrame]:
     """→ (curated, funnel).
 
@@ -69,16 +67,14 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     document cannot vote a span into the removable set and a duplicate
     pair cannot vote its full text in (see module docstring).
 
-    ``intermediate="parquet"`` (default): the two expensive stage
-    frames — the PII-gated+fingerprinted corpus and the span-rewritten
-    corpus — are written once to scratch storage (same pattern and
-    rotation as plans/pipeline.build_triples) and every funnel branch
+    The two expensive stage frames — the PII-gated+fingerprinted corpus
+    and the span-rewritten corpus — are written once to a
+    ``session.stage_scratch_path(spark, "curation")`` directory (it
+    keeps the current and the previous build) and every funnel branch
     plus ``curated`` scans the files. The PII regex scan, the dedup
     shuffle, and the span rewrite each execute EXACTLY once no matter
     how many consumers run — the round-4 lazy funnel re-executed the
     span stage per aggregate (a 4-5× corpus recompute at scale).
-    ``intermediate="none"``: fully lazy, recomputed per consumer (toy
-    inputs / plan-inspection only).
 
     Opt-in gates (both ``None``-off by default, preserving the q51
     oracle funnel): ``contamination_canaries`` inserts the literal
@@ -104,31 +100,25 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     if contamination_canaries is not None:
         from ..operators.piiscan import contamination_gate
 
-        if intermediate == "parquet":
-            # the funnel's 01 count must be PRE-contamination, but the
-            # materialized fp files are post-both-gates; an Observation
-            # between the two filters counts the pii-clean rows on the
-            # fp write itself — no second regex pass over the corpus
-            # (the module's each-stage-executes-once invariant)
-            import uuid
+        # the funnel's 01 count must be PRE-contamination, but the
+        # materialized fp files are post-both-gates; an Observation
+        # between the two filters counts the pii-clean rows on the fp
+        # write itself — no second regex pass over the corpus (the
+        # module's each-stage-executes-once invariant)
+        import uuid
 
-            from pyspark.sql.observation import Observation
+        from pyspark.sql.observation import Observation
 
-            obs01 = Observation(f"pii01_{uuid.uuid4().hex}")
-            pii_clean = pii_clean.observe(
-                obs01, F.count(F.lit(1)).alias("n"))
+        obs01 = Observation(f"pii01_{uuid.uuid4().hex}")
+        pii_clean = pii_clean.observe(obs01, F.count(F.lit(1)).alias("n"))
         clean0, _contam = contamination_gate(pii_clean, "id", text_col,
                                              canaries=contamination_canaries)
     fp = clean0.withColumn(
         "_fp", F.coalesce(F.md5(text_col), F.lit(_NULL_FP)))
 
-    stage_base = None
-    if intermediate == "parquet":
-        from .pipeline import _stage_scratch
-
-        stage_base = _stage_scratch(spark, temp_dir, name="curation")
-        fp.write.mode("overwrite").parquet(f"{stage_base}/fp")
-        fp = spark.read.parquet(f"{stage_base}/fp")
+    stage_base = stage_scratch_path(spark, "curation")
+    fp.write.mode("overwrite").parquet(f"{stage_base}/fp")
+    fp = spark.read.parquet(f"{stage_base}/fp")
 
     unique = (fp.groupBy("_fp").agg(F.min("id").alias("id"))
               .join(fp, ["_fp", "id"])
@@ -138,9 +128,8 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                                       k=k, min_docs=min_docs)
     staged = (unique.select("id", "source")
               .join(rewritten, "id"))
-    if stage_base is not None:
-        staged.write.mode("overwrite").parquet(f"{stage_base}/staged")
-        staged = spark.read.parquet(f"{stage_base}/staged")
+    staged.write.mode("overwrite").parquet(f"{stage_base}/staged")
+    staged = spark.read.parquet(f"{stage_base}/staged")
 
     qc = quality_counts(staged, "id", "text_clean")
     gated = (staged.join(qc, "id")
@@ -156,24 +145,19 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         final, _rep_bad = repetition_gate(gated, "id", "text_clean",
                                           thresholds=repetition_thresholds)
 
-    # Funnel branches read the materialized stages (parquet mode):
-    # 00 is a raw-input count (no regex), 01/02 are footer-cheap counts
-    # of the stage files (the span rewrite preserves rows, so the
-    # staged count IS the post-dedup count), 03/04 are single filtered
-    # scans of the staged files.
-    # with the contamination gate ON, the materialized fp files are
-    # post-BOTH-gates; 01 comes from the Observation captured on the
-    # fp write (parquet mode — zero extra passes) or, fully-lazy, from
-    # a live re-run of the pii predicate (plan-inspection mode only)
-    if contamination_canaries is None:
+    # Funnel branches read the materialized stages: 00 is a raw-input
+    # count (no regex), 01/02 are footer-cheap counts of the stage files
+    # (the span rewrite preserves rows, so the staged count IS the
+    # post-dedup count), 03/04 are single filtered scans of the staged
+    # files. With the contamination gate ON, the materialized fp files
+    # are post-BOTH-gates; 01 comes from the Observation captured on the
+    # fp write (zero extra passes).
+    if obs01 is None:
         row01 = (fp.agg(F.count(F.lit(1)).alias("n"))
                  .select(F.lit("01_pii_clean").alias("stage"), "n"))
-    elif obs01 is not None:
+    else:
         row01 = local_frame(spark, [("01_pii_clean", int(obs01.get["n"]))],
                             "stage string, n long")
-    else:
-        row01 = (pii_clean.agg(F.count(F.lit(1)).alias("n"))
-                 .select(F.lit("01_pii_clean").alias("stage"), "n"))
     funnel = (
         base.agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit("00_input").alias("stage"), "n")

@@ -9,15 +9,11 @@ filesystem round-trips (master_RDF_fix-validate-normalize.sh:178-201):
       → link entities (broadcast dict join; 2 small shuffles)
       → enrich (generated rows, unions)
       → finalize (dedupe shuffle) → write partitionBy(graph)
-
-plus the owl:sameAs alias edges feeding connected-components for the
-entity→canonical map (written alongside the graph table).
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,91 +21,41 @@ from pyspark.sql.observation import Observation
 
 from ..operators.canonicalize import (
     annotate_canonical,
-    canonicalize_triples,
     split_canonical,
+    stage_section_col,
 )
-from ..operators.cc import connected_components
 from ..operators.enrich import enrich_triples
 from ..operators.extract import extract_triples
 from ..operators.link import event_entities, link_entities
 from ..operators.materialize import finalize_triples
-
-
-_BUILD_SEQ = iter(range(1, 1 << 31))
-_PRIOR_BUILDS: dict[str, list[str]] = {}
-
-
-def _stage_scratch(spark: SparkSession, temp_dir: str | None,
-                   name: str = "kg_canon") -> str:
-    """App-scoped scratch path for the canonicalized stage table, with a
-    per-build subdir (process-wide counter): a second build in the same
-    session gets a fresh directory instead of overwriting the one an
-    earlier build's still-unconsumed DataFrame lazily reads (the round-2
-    fixed-path scheme silently swapped data under it; concurrent builds
-    clobbered each other).
-
-    Usage is BOUNDED at two subdirs per base (current + immediately
-    previous): older builds are deleted when a new one starts — scratch
-    is RAM-backed (/dev/shm) and an N-run bench would otherwise hold N
-    multi-GB stage copies. The previous build stays readable, which
-    covers the one-outstanding-DataFrame pattern; anything older is
-    assumed consumed. Everything is removed at interpreter exit."""
-    seq = next(_BUILD_SEQ)
-    if temp_dir is not None:
-        base = f"{temp_dir}/{name}_{spark.sparkContext.applicationId}"
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    else:
-        from ..session import app_scratch_path
-
-        base = app_scratch_path(spark, name)
-    prior = _PRIOR_BUILDS.setdefault(base, [])
-    for old in prior[:-1]:  # keep only the most recent prior build
-        shutil.rmtree(old, ignore_errors=True)
-    del prior[:-1]
-    path = f"{base}/b{seq}"
-    prior.append(path)
-    return path
+from ..session import stage_scratch_path
 
 
 def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
-                  intermediate: str = "parquet",
-                  temp_dir: str | None = None,
                   metrics: dict | None = None) -> DataFrame:
     """Plan for the final deduped (graph, subj, pred, obj, obj_is_iri).
 
     The extraction output fans out to ~8 consumers (canonical stream,
-    sameAs edges, linking, event flags, wikidata/viaf flags). How the
-    fan-out point is materialized matters:
+    sameAs edges, linking, event flags, wikidata/viaf flags), so the
+    canonicalize-annotated triple stage (raw + obj_canon) is written
+    once to scratch, partitioned by ``stage_section_col``, and read
+    back: the pandas extraction and the 12-rule regexp chain each run
+    exactly once, and every branch scans columnar files in parallel.
+    Both measured alternatives were slower: ``persist`` serialized under
+    32-thread contention (2.5x wall), and a lazy plan re-ran extraction
+    and the regexp chain per branch (BENCH.md round 1).
 
-    * ``intermediate="parquet"`` (default): write the canonicalize-
-      annotated triple stage (raw + obj_canon) to scratch storage and
-      read it back — the pandas extraction AND the 12-rule regexp chain
-      each run exactly once, and every branch scans columnar files in
-      parallel. This is also the cluster-scale pattern (stage tables
-      between pipeline phases). Measured alternatives: BlockManager
-      ``persist`` serializes under 32-thread contention (2.5x wall), and
-      no materialization re-runs extraction + regexps per branch (the
-      regexp chain re-execution was the top CPU sink: 2.2k CPU-seconds
-      at 310k-turn scale).
-    * ``intermediate="persist"``: Dataset cache (MEMORY_AND_DISK).
-    * ``intermediate="none"``: fully lazy — recomputed per branch.
-
-    Scratch retention (parquet mode): the process keeps only the CURRENT
-    and the IMMEDIATELY PREVIOUS build's stage directories — starting a
-    third build deletes the oldest, so a DataFrame returned by a build
-    two-or-more calls back raises FileNotFoundException at action time.
-    Consume (or ``persist``) results before starting multiple newer
-    builds, or pass a per-build ``temp_dir`` to opt out of the shared
-    rotation.
+    The stage directory comes from ``session.stage_scratch_path``: only
+    the current and the immediately previous build's stage are kept, so
+    a DataFrame returned by a build two or more calls back raises
+    FileNotFoundException at action time. Consume (or ``persist``)
+    results before starting two newer builds.
     """
     annotated = annotate_canonical(extract_triples(transcripts))
     if metrics is not None:
         # validation-gate accounting (validateRDFs.sh:177-205 warn/error
-        # tallies): counters ride the existing write action via an
-        # Observation — no extra pass over the data. Populated once the
-        # stage materializes (parquet mode: below; else: first action).
-        import uuid
-
+        # tallies): counters ride the stage-table write via an
+        # Observation — no extra pass over the data.
         is_p4 = ~F.col("obj_is_iri") & (F.col("obj") == "")
         obs = Observation(f"canon_{uuid.uuid4().hex}")
         annotated = annotated.observe(
@@ -119,35 +65,19 @@ def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
             F.sum(F.when(F.col("is_technical"), 1).otherwise(0)).alias("n_p5"),
         )
         metrics["canon"] = obs
-    if intermediate == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
-    elif intermediate == "parquet":
-        import os
-
-        spark = transcripts.sparkSession
-        path = _stage_scratch(spark, temp_dir)
-        if os.environ.get("SPARK_GRAFT_STAGE_SECT", "1") != "0":
-            from ..operators.canonicalize import stage_section_col
-
-            (annotated.withColumn("sect", stage_section_col())
-             .write.mode("overwrite").partitionBy("sect").parquet(path))
-        else:
-            annotated.write.mode("overwrite").parquet(path)
-        annotated = spark.read.parquet(path)
-    canonical, sameas = split_canonical(annotated)
-    spo = canonical.select("subj", "pred", "obj", "obj_is_iri")
-    if "sect" in annotated.columns:
-        # partition-pruned branch inputs: the entity branches (linking,
-        # event flags, enrichment mentions) read only sect='m'; the
-        # sameAs branch reads sect∈{'m','a'} (rows in 'o' cannot emit
-        # alias edges by construction of stage_section_col)
-        ent_canonical, _ = split_canonical(annotated.filter(F.col("sect") == "m"))
-        ent_spo = ent_canonical.select("subj", "pred", "obj", "obj_is_iri")
-        _, sameas = split_canonical(annotated.filter(F.col("sect") != "o"))
-    else:
-        ent_spo = spo
+    spark = transcripts.sparkSession
+    path = stage_scratch_path(spark, "kg_canon")
+    (annotated.withColumn("sect", stage_section_col())
+     .write.mode("overwrite").partitionBy("sect").parquet(path))
+    annotated = spark.read.parquet(path)
+    spo = split_canonical(annotated)[0].select("subj", "pred", "obj", "obj_is_iri")
+    # partition-pruned branch inputs: the entity branches (linking, event
+    # flags, enrichment mentions) read only sect='m'; the sameAs branch
+    # reads sect∈{'m','a'} (rows in 'o' cannot emit alias edges by
+    # construction of stage_section_col)
+    ent_canonical, _ = split_canonical(annotated.filter(F.col("sect") == "m"))
+    ent_spo = ent_canonical.select("subj", "pred", "obj", "obj_is_iri")
+    _, sameas = split_canonical(annotated.filter(F.col("sect") != "o"))
     links = link_entities(ent_spo, dict_df)
     events = event_entities(ent_spo)
     generated = enrich_triples(ent_spo, links, events)
@@ -155,21 +85,10 @@ def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
                    .unionByName(sameas.select("subj", "pred", "obj", "obj_is_iri"))
                    .unionByName(generated))
     if metrics is not None:
-        import uuid
-
         obs_pre = Observation(f"prefinal_{uuid.uuid4().hex}")
         all_triples = all_triples.observe(obs_pre, F.count(F.lit(1)).alias("n"))
         metrics["pre_final"] = obs_pre
     return finalize_triples(all_triples)
-
-
-def build_canonical_map(transcripts: DataFrame) -> DataFrame:
-    """Alias-resolution map via connected components over the owl:sameAs
-    edge set: (member, canonical)."""
-    raw = extract_triples(transcripts)
-    _, sameas = canonicalize_triples(raw)
-    edges = sameas.select("subj", "obj").toDF("src", "dst")
-    return connected_components(edges)
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
@@ -188,8 +107,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
     violating the input contract (null keys, negative turn_idx, null
     text) are split off, optionally written to ``quarantine_path``, and
     counted to lineage — never fed to extraction, never fatal."""
-    import uuid
-
     from ..operators.materialize import write_graph_table
     from ..sources.readers import gate_well_formed
 

@@ -8,7 +8,10 @@ the 200 default, UTC session TZ so DuckDB oracle comparisons are stable.
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -24,8 +27,6 @@ _PKG_ROOT = str(Path(__file__).resolve().parents[1])
 
 def package_zip(target_dir: str = "/tmp") -> str:
     """Zip this package for ``spark-submit --py-files`` / ``addPyFile``."""
-    import shutil
-
     base = os.path.join(target_dir, "glean_cetaf_rdfs_spark")
     return shutil.make_archive(base, "zip", root_dir=_PKG_ROOT,
                                base_dir="glean_cetaf_rdfs_spark")
@@ -45,6 +46,8 @@ def _scratch_dir() -> str:
 
 
 _APP_SCRATCH_REGISTERED: set[str] = set()
+_BUILD_SEQ = itertools.count(1)
+_PRIOR_BUILDS: dict[str, list[str]] = {}
 
 
 def app_scratch_path(spark: SparkSession, name: str) -> str:
@@ -52,13 +55,31 @@ def app_scratch_path(spark: SparkSession, name: str) -> str:
     bounded to one copy per SparkSession (overwritten on rebuild) and
     removed at interpreter exit. /dev/shm is RAM; uuid-per-run paths leak
     it across repeated bench/test runs."""
-    import atexit
-    import shutil
-
     path = f"{_scratch_dir()}/{name}_{spark.sparkContext.applicationId}"
     if path not in _APP_SCRATCH_REGISTERED:
         _APP_SCRATCH_REGISTERED.add(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def stage_scratch_path(spark: SparkSession, name: str) -> str:
+    """A fresh per-build directory ``<app_scratch_path>/b<seq>`` for a
+    plan's stage tables (``kg_canon``, ``curation``).
+
+    A new build never overwrites the files an earlier build's
+    still-unconsumed DataFrame lazily reads. Only the current and the
+    immediately previous build directory are kept per base: starting a
+    third build deletes the oldest, so a DataFrame from two or more
+    builds back raises FileNotFoundException at action time. Scratch is
+    RAM-backed (/dev/shm) where available, and an N-run bench would
+    otherwise hold N stage copies."""
+    base = app_scratch_path(spark, name)
+    prior = _PRIOR_BUILDS.setdefault(base, [])
+    for old in prior[:-1]:
+        shutil.rmtree(old, ignore_errors=True)
+    del prior[:-1]
+    path = f"{base}/b{next(_BUILD_SEQ)}"
+    prior.append(path)
     return path
 
 

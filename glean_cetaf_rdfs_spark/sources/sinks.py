@@ -1,27 +1,17 @@
-"""Sink operators (SURVEY.md §2.1 S8-S10).
+"""Text sink operators (SURVEY.md §2.1 S6, S8).
 
 The reference appends per-worker shard files, posts TriG chunks to a
-Fuseki named graph, and tees logs/errors to side files. Engine versions:
-partitioned columnar writes with bounded file sizes (patternsplit.awk's
-50 MB record-boundary chunking → ``maxRecordsPerFile``; Spark never
-splits a row), and the lineage table instead of log files.
+Fuseki named graph, and tees logs/errors to side files. The columnar
+named-graph sink is ``operators.materialize.write_graph_table``
+(patternsplit.awk's 50 MB record-boundary chunking →
+``maxRecordsPerFile``), and the lineage table
+(``streaming.checkpoint.append_lineage``) replaces the log files. This
+module holds the N-Triples and TriG text serializations.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_shards(df: DataFrame, path: str, partition_cols: list[str],
-                 max_records_per_file: int = 1_000_000,
-                 mode: str = "overwrite") -> None:
-    """S8/S9 — partitioned columnar sink. partition_cols=['graph'] is the
-    named-GRAPH layout (import_rdf2trig…sh:281; README.md:52-60): one
-    directory per graph, SPARQL-endpoint-loadable N-Triple-style rows."""
-    (df.write.mode(mode)
-     .option("maxRecordsPerFile", max_records_per_file)
-     .partitionBy(*partition_cols)
-     .parquet(path))
 
 
 def write_ntriples_text(triples: DataFrame, path: str,
@@ -73,9 +63,3 @@ def write_trig_text(triples: DataFrame, path: str, mode: str = "overwrite") -> N
                      F.array_join("pos", " ;\n  "), F.lit(" ."))
     (grouped.select("graph", block.alias("value"))
      .write.mode(mode).partitionBy("graph").text(path))
-
-
-def append_lineage(df: DataFrame, path: str) -> None:
-    """S10 — log/error side-channel → append-only lineage/metrics table
-    (get_RDF4domain…:428-438; JACQ.sh:875-892)."""
-    df.write.mode("append").parquet(path)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ..operators.materialize import finalize_triples, write_graph_table
 from ..plans.pipeline import build_triples
 from ..session import local_frame
 
@@ -94,9 +95,7 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
         final = build_triples(part)
         obs_out = Observation(f"out_{run_id}_{b}")
         final = final.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        (final.write.mode("overwrite")
-         .partitionBy("graph")
-         .parquet(f"{out_path}/bucket={b}"))
+        write_graph_table(final, f"{out_path}/bucket={b}")
         rows_in = int(obs_in.get["n"])
         rows_out = int(obs_out.get["n"])
         append_lineage(spark, ckpt_path, run_id,
@@ -121,8 +120,6 @@ def compact_buckets(spark: SparkSession, bucketed_path: str,
     output is bit-identical while the compaction's one wide shuffle
     carries one fewer string column (the same ~quarter-payload narrowing
     finalize_triples gives the one-shot pipeline)."""
-    from ..operators.materialize import finalize_triples, write_graph_table
-
     unified = finalize_triples(
         spark.read.parquet(bucketed_path)
         .select("subj", "pred", "obj", "obj_is_iri"))

@@ -5,11 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from glean_cetaf_rdfs_spark.operators.link_fuzzy import fuzzy_link
-from glean_cetaf_rdfs_spark.operators.skew import (
-    salted_count,
-    salted_distinct,
-    salted_join_small,
-)
+from glean_cetaf_rdfs_spark.operators.skew import salted_count, with_salt
 
 NAMES = [
     ("Botanic Garden and Botanical Museum Berlin", "https://ror.org/00bv4cx53"),
@@ -61,40 +57,11 @@ def test_salted_count_matches_plain(spark):
     assert salted == plain
 
 
-def test_salted_distinct_matches_plain(spark):
-    df = _skewed_df(spark)
-    plain = df.select("key", "payload").distinct().count()
-    assert salted_distinct(df, "key", "payload").count() == plain
-
-
-def test_salted_join_matches_plain(spark):
-    big = _skewed_df(spark)
-    small = spark.createDataFrame(
-        [("hot", "HOT"), ("cold1", "C1"), ("missing", "M")], "key string, label string")
-    plain = big.join(small, "key").groupBy("key", "label").count()
-    salted = salted_join_small(big, small, "key").groupBy("key", "label").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # left join preserves unmatched rows
-    n_left = salted_join_small(big, small, "key", how="left").count()
-    assert n_left == big.count()
-
-
 def test_salt_spreads_identical_duplicate_rows(spark):
-    """With the spread_duplicates OPT-IN, byte-identical duplicates of
-    one hot key must land in MULTIPLE salt shards (content-hash-only
-    salting puts them all in one, defeating the mitigation in the
-    duplicate-heavy case the opt-in targets). The DEFAULT is the pure
-    content hash — deterministic under task retry — per the documented
-    idempotent-routing contract."""
-    from glean_cetaf_rdfs_spark.operators.skew import _stable_salt_src, with_salt
-
+    """Salts are a deterministic content hash, per the idempotent-routing
+    contract: byte-identical duplicates of one hot key share a shard, so
+    a task retry re-routes every row identically."""
     df = spark.createDataFrame([("hot", "same-payload")] * 2000,
                                "key string, payload string").repartition(8)
-    n_shards = (with_salt(df, _stable_salt_src(df, spread_duplicates=True),
-                          n_salts=16)
-                .select("_salt").distinct().count())
-    assert n_shards >= 8
-    # default: deterministic content hash → identical rows share a shard
-    n_det = (with_salt(df, _stable_salt_src(df), n_salts=16)
-             .select("_salt").distinct().count())
+    n_det = with_salt(df, n_salts=16).select("_salt").distinct().count()
     assert n_det == 1

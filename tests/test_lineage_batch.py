@@ -5,12 +5,17 @@ progress/ETA report."""
 from __future__ import annotations
 
 import glob
+import os
 
 from pyspark.sql import functions as F
 
 from glean_cetaf_rdfs_spark.plans.pipeline import build_triples, run_pipeline
 from glean_cetaf_rdfs_spark.plans.reports import progress_report
-from glean_cetaf_rdfs_spark.session import _scratch_dir
+from glean_cetaf_rdfs_spark.session import (
+    _scratch_dir,
+    app_scratch_path,
+    stage_scratch_path,
+)
 from glean_cetaf_rdfs_spark.streaming.checkpoint import compact_buckets, run_resumable
 
 
@@ -37,6 +42,24 @@ def test_batch_lineage_rows_and_scratch_bounded(spark, tiny_df, tmp_path):
     run_pipeline(spark, tiny_df, out, lineage_path=ck, run_id="t2")
     mine = [d for d in glob.glob(_scratch_dir() + "/kg_canon_*") if appid in d]
     assert len(mine) == 1
+
+
+def test_build_scratch_rotation_keeps_current_and_previous(spark):
+    """A third build of one stage name deletes the oldest build's
+    directory and keeps the previous one readable; every build lives
+    under the name's one app-scoped base, and each name rotates on its
+    own."""
+    kg_base = app_scratch_path(spark, "kg_canon")
+    kg = []
+    for _ in range(3):
+        kg.append(stage_scratch_path(spark, "kg_canon"))
+        os.makedirs(kg[-1])  # what a build's stage write leaves
+    assert not os.path.exists(kg[0])
+    assert os.path.isdir(kg[1]) and os.path.isdir(kg[2])
+    assert {os.path.dirname(p) for p in kg} == {kg_base}
+    cur = stage_scratch_path(spark, "curation")
+    assert os.path.dirname(cur) == app_scratch_path(spark, "curation") != kg_base
+    assert os.path.isdir(kg[1])  # another name's build rotates nothing here
 
 
 def test_compact_buckets_restores_uniqueness(spark, tiny_df, tmp_path):

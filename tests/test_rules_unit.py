@@ -122,12 +122,18 @@ def test_doubled_uri_fix():
     # two DIFFERENT urls concatenated are not a double
     v = "http://dup.example/r/8"
     assert canonicalize_py(u + v) == u + v
+    # one pass, as in the reference's sed chain: a 4x repeat halves once
+    assert canonicalize_py(u * 4) == u * 2
 
 
 def test_amp_escape_decode():
     """P13 (fixRDF:412-413) net of the parser's unescape."""
     assert (canonicalize_py("http://o.example/q?a=1&amp;b=2")
             == "http://o.example/q?a=1&b=2")
+    # one pass, as in the reference's sed chain: a doubly escaped
+    # ampersand loses one escape level, not both
+    assert (canonicalize_py("http://a.example/x?a=1&amp;amp;b=2")
+            == "http://a.example/x?a=1&amp;b=2")
 
 
 def test_media_literal_retype_p19():
@@ -174,6 +180,8 @@ def test_canonicalize_col_parity_adversarial(spark):
         "http://x.example:8080/a/b/c/d/e",               # deep path, odd port
         "http://tun.example/a?format=X",                 # technical
         "http://üml.example/p",                     # unicode host
+        "http://a.example/x?a=1&amp;amp;b=2",            # doubly escaped &
+        "http://dup.example/r/9" * 4,                    # 4x repeat
     ]
     df = spark.createDataFrame([(u,) for u in urls], "u string")
     got = df.select(

@@ -7,7 +7,8 @@ from glean_cetaf_rdfs_spark.sources.readers import (
     read_transcripts,
     read_uri_list,
 )
-from glean_cetaf_rdfs_spark.sources.sinks import write_ntriples_text, write_shards
+from glean_cetaf_rdfs_spark.operators.materialize import write_graph_table
+from glean_cetaf_rdfs_spark.sources.sinks import write_ntriples_text
 
 
 def test_read_uri_list(spark, tmp_path):
@@ -58,10 +59,12 @@ def test_partitioned_shard_sink(spark, tmp_path):
     df = spark.createDataFrame([("g1", i) for i in range(10)] + [("g2", 1)],
                                "graph string, x int")
     out = str(tmp_path / "shards")
-    write_shards(df, out, ["graph"], max_records_per_file=3)
+    write_graph_table(df, out, max_records_per_file=3)
     back = spark.read.parquet(out)
     assert back.count() == 11
     assert {r["graph"] for r in back.select("graph").distinct().collect()} == {"g1", "g2"}
+    # maxRecordsPerFile: 10 rows at most 3 per file → at least 4 files
+    assert len(list((tmp_path / "shards" / "graph=g1").glob("*.parquet"))) >= 4
 
 
 def test_trig_subject_grouped_sink(spark, tmp_path):
