@@ -105,10 +105,3 @@ def split_canonical(with_canon: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
     )
     return canonical, sameas
-
-
-def canonicalize_triples(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One-shot convenience: annotate + split (used by the streaming path
-    and tests; the batch pipeline materializes the annotated frame
-    between the two steps)."""
-    return split_canonical(annotate_canonical(raw))

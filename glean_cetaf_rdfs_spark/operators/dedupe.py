@@ -135,9 +135,8 @@ def band_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     candidates. Banding is a NARROW reshape of the wide signature
     (band_sig built by column concat; no groupBy) — zero extra shuffles
     after the one signature aggregation. Shared by the batch pair
-    finder (:func:`minhash_lsh_pairs`) and the incremental cross-batch
-    gate (streaming/neardedup.py), which persists exactly these rows as
-    its band store."""
+    finder (:func:`minhash_lsh_pairs`) and the near-contamination gate
+    (operators/piiscan.near_contamination_gate)."""
     rows_per_band = k // bands
     sig = minhash_signatures(df, id_col, text_col, n, k)
     band_structs = []

@@ -200,10 +200,8 @@ def near_contamination_gate(df: DataFrame, id_col: str, text_col: str,
     for eval leakage that survives the exact checks
     (:func:`contamination_scan_table` counts verbatim shingle overlap;
     a lightly-edited or re-wrapped eval document shares bands, not
-    necessarily whole shingles). Candidate-level semantics, same
-    contract and rationale as the incremental near-dup gate
-    (streaming/neardedup.py): dropping on candidacy is the conservative
-    direction for decontamination.
+    necessarily whole shingles). Candidate-level semantics: dropping
+    on candidacy is the conservative direction for decontamination.
 
     Scale shape: the corpus side is one band_signatures pass (one
     groupBy(id) shuffle); the eval side is benchmark-sized, so its

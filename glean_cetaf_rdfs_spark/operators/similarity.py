@@ -513,14 +513,6 @@ def pq_adc_topk(codes_df: DataFrame, query: list[float],
             .orderBy(F.col("adc").desc(), "id").limit(k))
 
 
-def pq_topk(df: DataFrame, id_col: str, vec_col: str, query: list[float],
-            k: int = 10, m: int = 16, k_codes: int = 64) -> DataFrame:
-    """Train + encode + ADC in one call (inline form; the table form
-    below is the 100 TB path). → (id, adc)."""
-    books = pq_train(df, id_col, vec_col, m=m, k_codes=k_codes)
-    return pq_adc_topk(pq_encode(df, id_col, vec_col, books), query, books, k)
-
-
 def write_pq_codes(df: DataFrame, id_col: str, vec_col: str, path: str,
                    codebooks: "np.ndarray", n_planes: int = 4,
                    dim: int | None = None) -> None:

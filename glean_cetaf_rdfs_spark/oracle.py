@@ -127,8 +127,3 @@ def oracle_triples(transcripts: pd.DataFrame) -> set[Triple5]:
             kept.add(_graphed(turn, V.P_HAS_PART, V.O_VIAF_ROOT, True))
 
     return kept
-
-
-def oracle_df(transcripts: pd.DataFrame) -> pd.DataFrame:
-    rows = sorted(oracle_triples(transcripts))
-    return pd.DataFrame(rows, columns=["graph", "subj", "pred", "obj", "obj_is_iri"])

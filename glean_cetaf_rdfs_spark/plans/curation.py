@@ -222,62 +222,3 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
                 rows.append(("span_rewrite", "all", n1, n1, 0))
         append_lineage(spark, lineage_path, run_id, rows)
     return spark.read.parquet(out_path)
-
-
-def incremental_curation_writer(spark, id_col: str, text_col: str,
-                                out_path: str, band_store_dir: str, *,
-                                pii_max_hits: int = 0,
-                                contamination_canaries: list[str] | None = None,
-                                repetition_thresholds: dict[str, float] | None = None,
-                                n: int = 3, k: int = 8, bands: int = 4):
-    """Streaming curation: a ``foreachBatch`` body composing the
-    row-local gates with the cross-batch near-dup store — the
-    incremental form of :func:`curate_corpus` for corpora that GROW
-    (new crawl drops landing as files)::
-
-        (stream.writeStream
-            .foreachBatch(incremental_curation_writer(spark, "doc_id",
-                          "text", out, band_store))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start())
-
-    Per micro-batch: PII gate → optional contamination gate → optional
-    repetition gate (all row-local, so batch-at-a-time application is
-    EXACTLY the batch semantics), then the cross-batch near-duplicate
-    gate (streaming/neardedup.incremental_near_dedup — band store,
-    epoch-idempotent). Exact duplicates need no separate stage here:
-    byte-identical texts share every MinHash band, so the near-dup
-    gate subsumes exact dedup (min-id within a batch, first-admitted
-    across batches). Survivors append to ``out_path`` partitioned by
-    ``_epoch`` with the same dynamic-overwrite replay idempotence as
-    the band store.
-
-    Deliberately absent: SPAN removal — repeated-span commonality is a
-    corpus-GLOBAL statistic (a boilerplate footer is invisible until
-    enough carriers arrive), so rewriting per batch would under-remove
-    early and non-deterministically. The production shape is this
-    incremental gate chain plus a periodic batch
-    :func:`curate_corpus`-style span sweep over the accumulated
-    corpus — same division as the reference's per-harvest fixes vs
-    corpus-wide normalize passes."""
-    from ..operators.piiscan import contamination_gate, pii_gate
-    from ..operators.repetition import repetition_gate
-    from ..streaming.neardedup import incremental_near_dedup
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        clean, _bad = pii_gate(batch_df, text_col, max_hits=pii_max_hits)
-        if contamination_canaries is not None:
-            clean, _c = contamination_gate(clean, id_col, text_col,
-                                           canaries=contamination_canaries)
-        if repetition_thresholds is not None:
-            clean, _r = repetition_gate(clean, id_col, text_col,
-                                        thresholds=repetition_thresholds)
-        kept = incremental_near_dedup(spark, clean, id_col, text_col,
-                                      band_store_dir, epoch_id,
-                                      n=n, k=k, bands=bands)
-        (kept.withColumn("_epoch", F.lit(int(epoch_id)).cast("long"))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_epoch").parquet(out_path))
-
-    return write

@@ -1,10 +1,9 @@
-"""Source operators (SURVEY.md §2.1 S1-S7).
+"""Source operators (SURVEY.md §2.1): the transcript reader and the S4
+input gate.
 
-The reference's sources are text pipelines: URI lists (S1), gzip'd RDF/XML
-shards (S3), MIME-gated inputs (S4), JDBC URI queries (S7). Spark gives
-the mechanics (decompression, pushdown, schema) for free; what carries
-over is the *semantics*: filter-then-project before fan-out, malformed
-input counted not fatal, schema validation on read.
+Spark gives the mechanics (decompression, pushdown, schema) for free;
+what carries over from the reference's text sources is the *semantics*:
+schema validation on read, malformed input counted not fatal.
 """
 
 from __future__ import annotations
@@ -21,29 +20,6 @@ TRANSCRIPT_SCHEMA = Ty.StructType([
     Ty.StructField("tool", Ty.StringType(), True),
     Ty.StructField("ts", Ty.TimestampType(), True),
 ])
-
-
-def read_uri_list(spark: SparkSession, path: str) -> DataFrame:
-    """S1 — URI-list scan (get_RDF4domain_from_urilist_with_ETA.sh:475):
-    read text (gz transparent), strip CR, keep http(s) lines, project the
-    first URL token; trailing comment columns dropped. → (uri)."""
-    return (spark.read.text(path)
-            .select(F.regexp_replace("value", "\r", "").alias("line"))
-            .filter(F.col("line").rlike(r"^\s*https?://"))
-            .select(F.regexp_extract("line", r"^\s*(https?://\S+)", 1).alias("uri"))
-            .filter(F.col("uri") != ""))
-
-
-def read_uri_list_tsv(spark: SparkSession, path: str) -> DataFrame:
-    """S1 variant — TSV URI list with metadata columns
-    (doc/Finland/urilist…tsv): uri + institution + free comment."""
-    df = spark.read.csv(path, sep="\t", header=False)
-    cols = df.columns
-    out = df.select(
-        F.regexp_replace(F.col(cols[0]), "\r", "").alias("uri"),
-        *[F.col(c).alias(f"meta_{i}") for i, c in enumerate(cols[1:])],
-    )
-    return out.filter(F.col("uri").rlike(r"^https?://"))
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -70,18 +46,3 @@ def gate_well_formed(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     ok = (F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
           & (F.col("turn_idx") >= 0) & F.col("text").isNotNull())
     return transcripts.filter(ok), transcripts.filter(~ok)
-
-
-def read_jdbc_uri_list(spark: SparkSession, url: str, table: str,
-                       predicate: str | None = None, **options) -> DataFrame:
-    """S7 — JDBC URI-list source (doc/JACQ/JACQ-import-to-GRAPH…md:13-27,
-    MS-SQL SELECT occurrenceID FROM cetaf_ids WHERE inst LIKE …).
-    Thin wrapper: driver jars aren't in this image, so this is exercised
-    only when a JDBC URL is actually reachable; the call shape (pushdown
-    predicate included) is the contract."""
-    reader = (spark.read.format("jdbc")
-              .option("url", url).option("dbtable", table))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.load()
-    return df.filter(predicate) if predicate else df

@@ -90,16 +90,17 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
         if b in done:
             continue
         part = transcripts.filter(bucket_of(F.col("conv_id"), n_buckets) == b)
-        obs_in = Observation(f"in_{run_id}_{b}")
-        part = part.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        final = build_triples(part)
+        m: dict = {}
+        final = build_triples(part, metrics=m)
         obs_out = Observation(f"out_{run_id}_{b}")
         final = final.observe(obs_out, F.count(F.lit(1)).alias("n"))
         write_graph_table(final, f"{out_path}/bucket={b}")
-        rows_in = int(obs_in.get["n"])
-        rows_out = int(obs_out.get["n"])
-        append_lineage(spark, ckpt_path, run_id,
-                       [("materialize", str(b), rows_in, rows_out, 0)])
+        # same units as run_pipeline's materialize row: the pre-dedupe
+        # union in, the bucket's written triples out, dedupe losses dropped
+        pre_final = int(m["pre_final"].get["n"])
+        n_out = int(obs_out.get["n"])
+        append_lineage(spark, ckpt_path, run_id, [
+            ("materialize", str(b), pre_final, n_out, pre_final - n_out)])
         completed += 1
         if fail_after_bucket is not None and completed >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {b}")

@@ -1,6 +1,5 @@
 """Batch-path lineage accounting (validateRDFs.sh:187-205 analog),
-app-scoped scratch boundedness, cross-bucket compaction, and the A8
-progress/ETA report."""
+app-scoped scratch boundedness and cross-bucket compaction."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import os
 from pyspark.sql import functions as F
 
 from glean_cetaf_rdfs_spark.plans.pipeline import build_triples, run_pipeline
-from glean_cetaf_rdfs_spark.plans.reports import progress_report
 from glean_cetaf_rdfs_spark.session import (
     _scratch_dir,
     app_scratch_path,
@@ -73,22 +71,6 @@ def test_compact_buckets_restores_uniqueness(spark, tiny_df, tmp_path):
     want = {tuple(r) for r in one_shot.select(*cols).collect()}
     assert got == want
     assert compacted.count() == len(want)  # row-unique, not just set-equal
-
-
-def test_progress_report_eta(spark):
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [("r1", "materialize", str(k), 100, 90, 10, "done",
-             t0 + dt.timedelta(seconds=30 * k)) for k in range(3)]
-    ckpt = spark.createDataFrame(
-        rows, "run_id string, stage string, partition_key string, rows_in long, "
-              "rows_out long, rows_dropped long, status string, updated_ts timestamp")
-    rep = progress_report(ckpt, "r1", n_buckets=8).collect()[0]
-    assert rep["n_done"] == 3 and rep["n_remaining"] == 5
-    assert rep["elapsed_sec"] == 60.0
-    assert rep["rows_per_sec"] == round(270 / 60.0, 1)
-    assert rep["eta_sec"] == 150.0  # 30 s/bucket * 5 remaining
 
 
 def test_run_pipeline_gates_malformed_input(spark, tiny_df, tmp_path):

@@ -4,14 +4,8 @@ dictionary edge cases (SURVEY.md Appendix A) exercised directly."""
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import functions as F
-
 from glean_cetaf_rdfs_spark.data import vocab as V
 from glean_cetaf_rdfs_spark.operators.link import link_entities
-from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
-from glean_cetaf_rdfs_spark.plans.reports import namespace_report, per_graph_report
 
 
 def _mention_triples(spark, urls_by_turn):
@@ -69,17 +63,3 @@ def test_literal_cond_requires_sibling_code(spark):
     t = spark.createDataFrame(rows, "subj string, pred string, obj string, obj_is_iri boolean")
     links = {r["entity"]: r["canonical_id"] for r in link_entities(t).collect()}
     assert links == {"http://tun.example/specimen/1": "https://ror.org/029pk6x14"}
-
-
-def test_reports(spark, tiny_df):
-    final = build_triples(tiny_df)
-    rep = per_graph_report(final)
-    rows = {r["graph"]: r for r in rep.collect()}
-    assert "http://transcripts.example.org" in rows
-    assert all(r["n_triples"] >= r["n_subjects"] for r in rows.values())
-
-    ns = namespace_report(final).collect()
-    by_local = {r["local_name"]: r for r in ns}
-    # 'type' lives only in the rdf-syntax-ns namespace here
-    assert by_local["type"]["collision"] is False
-    assert by_local["type"]["n_namespaces"] == 1

@@ -12,7 +12,6 @@ from glean_cetaf_rdfs_spark.data.dictionary import entity_dictionary_df
 from glean_cetaf_rdfs_spark.operators.cc import connected_components
 from glean_cetaf_rdfs_spark.operators.sampling import sample_stratified
 from glean_cetaf_rdfs_spark.streaming import checkpoint as CK
-from glean_cetaf_rdfs_spark.streaming.neardedup import read_band_store
 
 
 def _assert_local(df) -> None:
@@ -64,9 +63,6 @@ def test_empty_state_frames_are_local(spark, tmp_path):
     _assert_local(ckpt)
     assert ckpt.count() == 0
     assert ckpt.schema == StructType.fromDDL(CK.CKPT_SCHEMA)
-    store = read_band_store(spark, str(tmp_path / "no_store"))
-    _assert_local(store)
-    assert store.count() == 0
 
 
 def test_local_frame_reads_naive_datetimes_as_utc(spark):

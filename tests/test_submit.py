@@ -14,7 +14,6 @@ import pytest
 REPO = Path(__file__).resolve().parents[1]
 
 
-@pytest.mark.slow
 def test_spark_submit_ships_with_pyfiles(tmp_path):
     from glean_cetaf_rdfs_spark.session import package_zip
 
