@@ -117,7 +117,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _full_registry() -> dict[str, tuple[Callable, str | None]]:
-    """Every implemented query, unfolded (54 entries) — the bench set."""
+    """Every implemented query, unfolded (55 entries) — the bench set."""
     full: dict[str, tuple[Callable, str | None]] = {}
     for reg in (RELATIONAL_QUERIES, DATA_QUERIES):
         full.update(reg)

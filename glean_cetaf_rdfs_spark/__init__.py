@@ -8,9 +8,10 @@ normalize→import pipeline for CETAF specimen URIs. This engine replaces it
 with one DataFrame DAG over multi-turn transcript tables:
 
     transcripts → extraction (Arrow mapInPandas) → URI canonicalization
-    (vectorized exprs) → entity linking (broadcast dict + LSH blocking)
-    → connected-components canonical IDs → per-subject enrichment
-    → dedupe → partitioned (graph) materialization,
+    (vectorized exprs, sameAs alias edges) → entity linking (broadcast
+    dictionary, longest-prefix and conditional-literal rules)
+    → per-subject enrichment → dedupe → partitioned (graph)
+    materialization,
 
 with a checkpoint/lineage table for idempotent resume (mirrors the
 reference's done-list anti-join, doc/JACQ/JACQ-import-to-GRAPH_20220815.md).

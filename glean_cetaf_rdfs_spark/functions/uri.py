@@ -150,23 +150,3 @@ def match_keys_py(url: str, max_path_segs: int = 3) -> list[str]:
             break
         keys.append(domain + "/" + "/".join(parts[1 : k + 1]))
     return keys
-
-
-def match_keys_col(col: Column, max_path_segs: int = 3) -> Column:
-    """Same candidate-key generation as an array<string> Column.
-
-    Uses ``F.get`` (null on out-of-bounds — ANSI-safe) and a cumulative
-    guard so a bad segment stops deeper keys, matching the Python
-    ``break`` semantics.
-    """
-    stripped = F.regexp_replace(col, r"^https?://", "")
-    parts = F.split(stripped, "/")
-    domain = F.split(F.get(parts, 0), ":").getItem(0)
-    keys = [domain]
-    ok = F.lit(True)
-    for k in range(1, max_path_segs + 1):
-        seg = F.get(parts, k)
-        ok = ok & seg.isNotNull() & (seg != "") & ~seg.contains("?")
-        key_k = F.concat(domain, F.lit("/"), F.array_join(F.slice(parts, 2, k), "/"))
-        keys.append(F.when(ok, key_k))
-    return F.filter(F.array(*keys), lambda x: x.isNotNull())

@@ -134,9 +134,8 @@ def band_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     per (doc, band); docs sharing any (band, band_sig) are LSH
     candidates. Banding is a NARROW reshape of the wide signature
     (band_sig built by column concat; no groupBy) — zero extra shuffles
-    after the one signature aggregation. Shared by the batch pair
-    finder (:func:`minhash_lsh_pairs`) and the near-contamination gate
-    (operators/piiscan.near_contamination_gate)."""
+    after the one signature aggregation. Feeds the batch pair finder
+    (:func:`minhash_lsh_pairs`)."""
     rows_per_band = k // bands
     sig = minhash_signatures(df, id_col, text_col, n, k)
     band_structs = []
@@ -388,36 +387,3 @@ def embedding_cosine_pairs_bucketed(df: DataFrame, id_col: str, vec_col: str,
                                        / (F.col("na") * F.col("nb")), 4))
             .filter(F.col("cos") >= threshold)
             .select("id_a", "id_b", "cos"))
-
-
-def embedding_dup_clusters(df: DataFrame, id_col: str, vec_col: str,
-                           threshold: float = 0.95, *,
-                           n_planes: int = 4, n_bands: int = 1,
-                           dim: int | None = None,
-                           checkpoint_dir: str | None = None) -> DataFrame:
-    """Cluster-level embedding dedup — the decision a curation pipeline
-    actually APPLIES. Near-dup PAIRS are not directly actionable:
-    dropping one member per pair over-deletes whenever clusters overlap
-    (a∼b, b∼c drops two of three). The transitive closure gives one
-    keep-decision per duplicate GROUP: pairs from the banded sign-LSH
-    path (:func:`embedding_cosine_pairs_bucketed`) feed the
-    large-star/small-star connected components (operators/cc.py — the
-    same composition q37 uses over minhash pairs), survivors are the
-    component minimum (the q41 APPLY convention).
-    → (id, canonical, is_survivor) covering EVERY input row (singletons
-    are their own canonical). Scale shape: the pair join is
-    bucket-bounded, CC shuffles a shrinking edge set, the final join is
-    id-partitioned — nothing quadratic, nothing driver-side."""
-    from .cc import connected_components
-
-    pairs = embedding_cosine_pairs_bucketed(
-        df, id_col, vec_col, threshold,
-        n_planes=n_planes, n_bands=n_bands, dim=dim)
-    comps = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        checkpoint_dir=checkpoint_dir)
-    ids = df.select(F.col(id_col).alias("id"))
-    return (ids.join(comps.withColumnRenamed("member", "id"), "id", "left")
-            .withColumn("canonical", F.coalesce("canonical", F.col("id")))
-            .withColumn("is_survivor", F.col("canonical") == F.col("id"))
-            .select("id", "canonical", "is_survivor"))

@@ -7,7 +7,7 @@ final table is ``dropDuplicates(graph, subj, pred, obj)`` written
 ``partitionBy("graph")``.
 
 Scale notes: the dedupe is the pipeline's one unavoidable wide shuffle —
-it hashes on all four columns, so hot graphs don't skew it.
+it hashes on (subj, pred, obj), so hot graphs don't skew it.
 ``maxRecordsPerFile`` bounds output file size (the reference's
 patternsplit.awk 50 MB chunking, never splitting inside a record — a
 row-oriented guarantee Spark gives for free)."""

@@ -101,23 +101,6 @@ def extract_metadata(assets: DataFrame, decode_fn=FakeCodec.decode) -> DataFrame
     return assets.mapInPandas(run, schema=META_SCHEMA)
 
 
-def resize_plan(meta: DataFrame, max_side: int = 512) -> DataFrame:
-    """Resize planning as relational ops over metadata (the byte-level
-    resample itself would run in the same mapInPandas as decode): scale
-    factor + output dims for images/videos over the limit."""
-    scale = F.round(F.lit(max_side) / F.greatest("width", "height"), 4)
-    needs = (F.col("width").isNotNull()
-             & (F.greatest("width", "height") > max_side))
-    return meta.select(
-        "asset_id", "kind", "width", "height",
-        F.when(needs, scale).otherwise(F.lit(1.0)).alias("scale"),
-        F.when(needs, F.round(F.col("width") * scale).cast("int"))
-        .otherwise(F.col("width")).alias("out_width"),
-        F.when(needs, F.round(F.col("height") * scale).cast("int"))
-        .otherwise(F.col("height")).alias("out_height"),
-    )
-
-
 def frame_sample_plan(meta: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling plan for videos: one row per planned frame via
     sequence+explode (the decode of each frame happens payload-side)."""

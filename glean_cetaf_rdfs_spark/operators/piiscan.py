@@ -190,42 +190,6 @@ def contamination_gate(df: DataFrame, id_col: str, text_col: str,
             joined.filter(bad).select(*keep))
 
 
-def near_contamination_gate(df: DataFrame, id_col: str, text_col: str,
-                            eval_df: DataFrame, eval_id_col: str,
-                            eval_text_col: str,
-                            n: int = 3, k: int = 8,
-                            bands: int = 4) -> tuple[DataFrame, DataFrame]:
-    """NEAR-duplicate decontamination: split (clean, contaminated) on
-    MinHash band collision with any held-out eval document — the gate
-    for eval leakage that survives the exact checks
-    (:func:`contamination_scan_table` counts verbatim shingle overlap;
-    a lightly-edited or re-wrapped eval document shares bands, not
-    necessarily whole shingles). Candidate-level semantics: dropping
-    on candidacy is the conservative direction for decontamination.
-
-    Scale shape: the corpus side is one band_signatures pass (one
-    groupBy(id) shuffle); the eval side is benchmark-sized, so its
-    band table (rows = eval docs × bands) is explicitly broadcast —
-    the whole gate adds zero corpus-keyed shuffles beyond the
-    signature aggregation. Both sides keep the input schema and
-    clean ∪ contaminated = input exactly (docs too short to shingle
-    produce no bands → clean)."""
-    from .dedupe import band_signatures
-
-    corpus_bands = band_signatures(df, id_col, text_col, n, k, bands)
-    eval_bands = (band_signatures(eval_df, eval_id_col, eval_text_col,
-                                  n, k, bands)
-                  .select("band", "band_sig").distinct())
-    # freeze the (small) colliding-id set once: both returned sides
-    # consume it in separate actions, and a lazy `hit` would re-run the
-    # corpus signature aggregation — the gate's dominant cost — twice
-    hit = (corpus_bands.join(F.broadcast(eval_bands), ["band", "band_sig"])
-           .select(F.col("id").alias(id_col)).distinct()
-           .localCheckpoint(eager=True))
-    return (df.join(hit, id_col, "left_anti"),
-            df.join(hit, id_col, "left_semi"))
-
-
 def contamination_scan_table_multi(df: DataFrame, id_col: str,
                                    text_col: str,
                                    eval_shingles: DataFrame,

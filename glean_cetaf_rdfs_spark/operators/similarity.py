@@ -39,17 +39,23 @@ def _norm(v):
                               lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
+def _scored_topk(df: DataFrame, query: list[float], k: int) -> DataFrame:
+    """(id, v) → (id, cos) top-k by cosine to ``query``, id tiebreak."""
+    qlit = F.array(*[F.lit(float(x)) for x in query])
+    qn = float(np.sqrt(np.dot(query, query)))
+    return (df.withColumn("cos", F.round(_dot(F.col("v"), qlit)
+                                         / (_norm(F.col("v")) * F.lit(qn)), 4))
+            .select("id", "cos")
+            .orderBy(F.col("cos").desc(), F.col("id"))
+            .limit(k))
+
+
 def cosine_topk(df: DataFrame, id_col: str, vec_col: str,
                 query: list[float], k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity to ``query``:
     → (id, cos) ordered desc, id tiebreak."""
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    qn = float(np.sqrt(np.dot(query, query)))
-    return (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-            .withColumn("cos", F.round(_dot(F.col("v"), qlit) / (_norm(F.col("v")) * F.lit(qn)), 4))
-            .select("id", "cos")
-            .orderBy(F.col("cos").desc(), F.col("id"))
-            .limit(k))
+    return _scored_topk(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), query, k)
 
 
 def lsh_bucket_of(vec_col, planes: list[list[int]]):
@@ -70,15 +76,6 @@ def lsh_bucket_of(vec_col, planes: list[list[int]]):
     return F.concat(*bits)
 
 
-def query_bucket(query: list[float], planes: list[list[int]]) -> str:
-    """Driver-side bucket key of a probe vector (same left-to-right
-    summation order as the column/SQL forms, so the bits agree)."""
-    return "".join(
-        "1" if sum(float(wi) * float(x) for wi, x in zip(w, query)) > 0 else "0"
-        for w in planes
-    )
-
-
 def probe_buckets(query: list[float], planes: list[list[int]],
                   n_probe: int = 1) -> list[str]:
     """Deterministic multi-probe sequence: the query's own bucket first,
@@ -97,16 +94,6 @@ def probe_buckets(query: list[float], planes: list[list[int]],
             break
         buckets.append(base[:j] + ("0" if base[j] == "1" else "1") + base[j + 1:])
     return buckets[:n_probe]
-
-
-def _scored_topk(df: DataFrame, query: list[float], k: int) -> DataFrame:
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    qn = float(np.sqrt(np.dot(query, query)))
-    return (df.withColumn("cos", F.round(_dot(F.col("v"), qlit)
-                                         / (_norm(F.col("v")) * F.lit(qn)), 4))
-            .select("id", "cos")
-            .orderBy(F.col("cos").desc(), F.col("id"))
-            .limit(k))
 
 
 def lsh_bucket_topk(df: DataFrame, id_col: str, vec_col: str,
@@ -288,258 +275,3 @@ def bucketed_table_topk(spark, path: str, query: list[float], k: int = 10,
     pruned = (spark.read.parquet(path)
               .filter(F.col("bucket").isin(probe_buckets(query, planes, n_probe))))
     return _scored_topk(pruned, query, k)
-
-
-# --- int8-quantized ANN storage --------------------------------------------
-
-def quantize_embeddings(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """→ (id, qv: array<tinyint>, scale: double): symmetric per-vector
-    max-abs int8 quantization (x → round(127·x / max|x|)). The vectors
-    are 4× smaller on disk and over every probe scan than float32 (8×
-    vs the float64 arrays Spark exchanges) — at 100 TB the ANN bucket
-    table's cost is IO, not arithmetic. COSINE IS SCALE-INVARIANT, so
-    probes score the int8 arrays directly (no dequantize pass): the
-    positive per-vector scale cancels in dot/(|a|·|b|), leaving only
-    the rounding error (recall floor asserted in test_dataops).
-    ``scale`` is retained for consumers that need magnitudes back
-    (e.g. L2 scoring). All-zero vectors keep scale 0 and qv all-zero —
-    their cosine is NULL, never in a top-k, same as the float path.
-
-    One Arrow-vectorized stage (numpy) — the engine's >4-folds rule:
-    64 per-component JVM fold expressions would cost more in Catalyst
-    analysis + codegen than the quantization itself."""
-    import pandas as pd
-
-    # id type follows the input schema (string doc ids work — the
-    # hard-coded ``id long`` crashed them with an opaque cast error)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"id {id_type}, qv array<tinyint>, scale double"
-
-    def quant(batches):
-        for pdf in batches:
-            if not len(pdf):  # empty Arrow batch: np.stack would raise
-                continue
-            if pdf[vec_col].isna().any():
-                bad = pdf.loc[pdf[vec_col].isna(), id_col].head(3).tolist()
-                raise ValueError(
-                    f"quantize_embeddings: NULL {vec_col!r} for ids {bad}; "
-                    "drop or fill NULL vectors before quantizing")
-            vs = np.stack([np.asarray(v, dtype=np.float64)
-                           for v in pdf[vec_col]])
-            mx = np.abs(vs).max(axis=1)
-            scale = mx / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.clip(np.rint(vs / safe[:, None]), -127, 127).astype(np.int8)
-            yield pd.DataFrame({
-                "id": pdf[id_col],
-                "qv": [row for row in q],
-                "scale": scale,
-            })
-
-    return df.select(id_col, vec_col).mapInPandas(quant, out_schema)
-
-
-def write_quantized_embeddings(df: DataFrame, id_col: str, vec_col: str,
-                               path: str, n_planes: int = 4,
-                               dim: int | None = None) -> None:
-    """Materialize the QUANTIZED ANN bucket table: (id, qv, scale)
-    written ``partitionBy("bucket")``. The sign-LSH bucket is computed
-    on the ORIGINAL float vector (bit-parity with the probe side's
-    float query), so quantization never flips a bucket assignment near
-    a hyperplane; only the stored vector is int8."""
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
-    planes = plane_weights(dim, n_planes)
-    buckets = df.select(F.col(id_col).alias("_bid"),
-                        lsh_bucket_of(F.col(vec_col), planes).alias("bucket"))
-    (quantize_embeddings(df, id_col, vec_col)
-     .join(buckets.withColumnRenamed("_bid", "id"), "id")
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def quantized_table_topk(spark, path: str, query: list[float], k: int = 10,
-                         n_planes: int = 4, n_probe: int = 1) -> DataFrame:
-    """Probe the int8 bucket table: partition-pruned exactly like
-    :func:`bucketed_table_topk` (``bucket IN (…)`` on the partition
-    column) but reading quarter-width vectors; scoring is the same JVM
-    fold over the tinyint arrays (scale cancels in cosine). → (id, cos)."""
-    planes = plane_weights(len(query), n_planes)
-    pruned = (spark.read.parquet(path)
-              .filter(F.col("bucket").isin(probe_buckets(query, planes, n_probe)))
-              .withColumnRenamed("qv", "v"))
-    return _scored_topk(pruned, query, k)
-
-
-# --- product quantization (PQ codes + ADC scoring) -------------------------
-
-def _kmeans(x: "np.ndarray", k: int, iters: int, seed: int) -> "np.ndarray":
-    """Seeded k-means++ + Lloyd (same scheme as :func:`ivf_centroids`,
-    kept separate so the q39 frozen-centroid oracle's code path stays
-    byte-identical). → (k, d) centers."""
-    rng = np.random.RandomState(seed)
-    centers = [x[int(rng.randint(len(x)))]]
-    for _ in range(1, k):
-        d2 = np.min([((x - c) ** 2).sum(axis=1) for c in centers], axis=0)
-        probs = (d2 / d2.sum() if d2.sum() > 0
-                 else np.full(len(x), 1.0 / len(x)))
-        centers.append(x[int(rng.choice(len(x), p=probs))])
-    c = np.array(centers)
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            members = x[assign == j]
-            if len(members):
-                c[j] = members.mean(axis=0)
-    return c
-
-
-def _pq_normalize(vs: "np.ndarray") -> "np.ndarray":
-    """L2-normalize rows; zero vectors stay zero (their ADC score is 0,
-    never in a top-k — matching the float path's NULL-cosine rule)."""
-    n = np.linalg.norm(vs, axis=1, keepdims=True)
-    return vs / np.where(n == 0.0, 1.0, n)
-
-
-def pq_train(df: DataFrame, id_col: str, vec_col: str,
-             m: int = 16, k_codes: int = 64, sample_n: int = 256,
-             iters: int = 8, seed: int = LSH_SEED) -> "np.ndarray":
-    """Product-quantization codebooks (Jégou et al., TPAMI'11): split
-    the L2-NORMALIZED vector into ``m`` contiguous subvectors and train
-    an independent ``k_codes``-center k-means per subspace — the
-    compression tier below int8 (:func:`quantize_embeddings`): a d=64
-    float32 vector (256 B) becomes ``m`` code bytes (16 B at the
-    default m=16 — 16× less scan IO), scored WITHOUT decompression via
-    ADC lookup tables.
-
-    Same sample-train/distributed-apply split as :func:`ivf_centroids`
-    (and the BPE learner): codebooks converge on a driver-side sample
-    (lowest ``sample_n`` ids — deterministic, engine-portable); only
-    encoding touches the full corpus. Normalizing first makes the ADC
-    inner product approximate COSINE, the engine's metric everywhere.
-    → (m, k_codes, d/m) float64 array, centers rounded to 6 dp.
-    Requires d divisible by m.
-
-    Default geometry (m=16 × 64 centers over d=64): the synthetic
-    fixture's embeddings are ISOTROPIC — PQ's worst case (measured on
-    it: ADC/cosine corr 0.91, top-10 overlap 6/10 at 16×; the coarser
-    m=8×16 managed corr 0.60) — so the defaults favor many small
-    subspaces. Real text embeddings concentrate on low-dimensional
-    structure and quantize far better at the same geometry; exact
-    re-ranking of the ADC candidate set is the standard refinement
-    either way (pq_adc_topk docstring)."""
-    _check_sample_n("pq_train", sample_n)
-    rows = (df.select(id_col, vec_col).orderBy(id_col)
-            .limit(sample_n).collect())
-    x = np.array([[float(v) for v in r[1]] for r in rows], dtype=np.float64)
-    if not len(x):
-        return np.zeros((m, 0, 0))
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"pq_train: dim {d} not divisible by m={m}")
-    if k_codes > 127:
-        # codes are stored tinyint; 128+ would wrap negative in
-        # pq_encode's int8 cast and element_at would silently read
-        # from the END of the ADC table
-        raise ValueError(f"pq_train: k_codes={k_codes} exceeds the "
-                         f"tinyint code range (max 127)")
-    x = _pq_normalize(x)
-    sub = d // m
-    books = []
-    for j in range(m):
-        xs = x[:, j * sub:(j + 1) * sub]
-        k = min(k_codes, len(xs))
-        books.append(np.round(_kmeans(xs, k, iters, seed + j), 6))
-    return np.stack(books)
-
-
-def pq_encode(df: DataFrame, id_col: str, vec_col: str,
-              codebooks: "np.ndarray") -> DataFrame:
-    """→ (id, codes: array<tinyint>): per subspace, the index of the
-    nearest codebook center to the normalized subvector. One Arrow
-    stage (numpy argmin over (batch, k) distance matrices per
-    subspace); codes fit tinyint for k_codes ≤ 127."""
-    import pandas as pd
-
-    m, k, sub = codebooks.shape
-    id_type = dict(df.dtypes)[id_col]  # string ids work (see quantize)
-
-    def enc(batches):
-        for pdf in batches:
-            if not len(pdf):  # empty Arrow batch: np.stack would raise
-                continue
-            if pdf[vec_col].isna().any():
-                bad = pdf.loc[pdf[vec_col].isna(), id_col].head(3).tolist()
-                raise ValueError(
-                    f"pq_encode: NULL {vec_col!r} for ids {bad}; drop or "
-                    "fill NULL vectors before encoding")
-            vs = _pq_normalize(np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]))
-            codes = np.empty((len(vs), m), dtype=np.int8)
-            for j in range(m):
-                xs = vs[:, j * sub:(j + 1) * sub]
-                d2 = ((xs[:, None, :] - codebooks[j][None, :, :]) ** 2
-                      ).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1).astype(np.int8)
-            yield pd.DataFrame({"id": pdf[id_col],
-                                "codes": [row for row in codes]})
-
-    return (df.select(id_col, vec_col)
-            .mapInPandas(enc, f"id {id_type}, codes array<tinyint>"))
-
-
-def pq_adc_topk(codes_df: DataFrame, query: list[float],
-                codebooks: "np.ndarray", k: int = 10) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over a PQ codes table: the query
-    stays FLOAT; per subspace a k_codes-entry inner-product lookup
-    table <q_sub, center> is built driver-side and rides the plan as
-    literals, so scoring is ``m`` array lookups + adds per row — one
-    codegen'd JVM expression over the tinyint codes, no Python stage
-    and no decompression. Scores approximate cosine (normalized-space
-    inner product); exact re-ranking of the ADC top candidates against
-    float vectors is the standard refinement when needed.
-    → (id, adc), TakeOrdered k."""
-    m, kc, sub = codebooks.shape
-    q = _pq_normalize(np.asarray(query, dtype=np.float64)[None, :])[0]
-    score = F.lit(0.0)
-    for j in range(m):
-        table = codebooks[j] @ q[j * sub:(j + 1) * sub]
-        tlit = F.array(*[F.lit(round(float(t), 6)) for t in table])
-        # codes are 0-based; element_at is 1-based (ANSI-safe: codes
-        # come from argmin over the same codebook, never out of range)
-        score = score + F.element_at(
-            tlit, F.col("codes").getItem(j).cast("int") + F.lit(1))
-    return (codes_df.select("id", F.round(score, 6).alias("adc"))
-            .orderBy(F.col("adc").desc(), "id").limit(k))
-
-
-def write_pq_codes(df: DataFrame, id_col: str, vec_col: str, path: str,
-                   codebooks: "np.ndarray", n_planes: int = 4,
-                   dim: int | None = None) -> None:
-    """Materialize the LSH-bucketed PQ table: (id, codes) written
-    ``partitionBy("bucket")`` with the bucket computed on the ORIGINAL
-    float vector (same rule as :func:`write_quantized_embeddings`).
-    Probes then compose BOTH scale levers: partition pruning cuts the
-    scanned rows to the probed buckets, PQ cuts the bytes per scanned
-    row (16× at the defaults) — and the codebooks (m·k_codes·d/m floats, KBs) ship in
-    the plan, nothing joins."""
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
-    planes = plane_weights(dim, n_planes)
-    buckets = df.select(F.col(id_col).alias("id"),
-                        lsh_bucket_of(F.col(vec_col), planes).alias("bucket"))
-    (pq_encode(df, id_col, vec_col, codebooks)
-     .join(buckets, "id")
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def pq_table_topk(spark, path: str, query: list[float],
-                  codebooks: "np.ndarray", k: int = 10,
-                  n_planes: int = 4, n_probe: int = 1) -> DataFrame:
-    """Probe the bucketed PQ table: bucket IN (probes) partition
-    pruning, then ADC scoring of the surviving code rows. → (id, adc)."""
-    planes = plane_weights(len(query), n_planes)
-    pruned = (spark.read.parquet(path)
-              .filter(F.col("bucket").isin(probe_buckets(query, planes,
-                                                         n_probe))))
-    return pq_adc_topk(pruned, query, codebooks, k)

@@ -196,77 +196,6 @@ def bpe_token_count(df: DataFrame, id_col: str, text_col: str,
             .mapInPandas(run, schema="id long, n_bpe_tokens long"))
 
 
-def learn_bpe_merges_py(texts: list[str], n_merges: int = 16,
-                        min_count: int = 2) -> list[str]:
-    """Classic BPE merge learning (Sennrich et al., ACL'16) over word
-    character sequences: repeatedly merge the most frequent adjacent
-    symbol pair (deterministic tiebreak by the pair itself), stop when
-    no pair reaches ``min_count``. Returns the merged PIECES (vocab
-    entries for :func:`bpe_pattern`), most-frequent merge first. Pure
-    function — drives the learner below and its tests."""
-    from collections import Counter
-
-    words = Counter()
-    for t in texts:
-        for w in (t or "").split():
-            if w:
-                words[tuple(w)] += 1
-    merges: list[str] = []
-    for _ in range(n_merges):
-        pairs: Counter = Counter()
-        for sym, cnt in words.items():
-            for a, b in zip(sym, sym[1:]):
-                pairs[(a, b)] += cnt
-        if not pairs:
-            break
-        (a, b), best = max(pairs.items(), key=lambda kv: (kv[1], kv[0]))
-        if best < min_count:
-            break
-        merges.append(a + b)
-        merged = Counter()
-        for sym, cnt in words.items():
-            out, i = [], 0
-            while i < len(sym):
-                if i + 1 < len(sym) and sym[i] == a and sym[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            merged[tuple(out)] += cnt
-        words = merged
-    return merges
-
-
-def learn_bpe_merges(df: DataFrame, id_col: str, text_col: str,
-                     n_merges: int = 16, sample: int = 512,
-                     min_count: int = 2) -> list[str]:
-    """Corpus-learned subword vocabulary: BPE merges trained on a
-    DETERMINISTIC driver-side sample and applied distributed — the
-    sample-train/distributed-apply split the IVF index already uses
-    (similarity.py trains centroids on a collected sample for the same
-    reason): merge learning is inherently sequential (each round's
-    counts depend on the previous merge), so iterating it as ``sample``
-    Spark rounds would be ``n_merges`` full-corpus passes for a
-    vocabulary that converges on kilobytes of text. The sample is the
-    ``sample`` texts with the smallest md5(id) — engine- and
-    partition-order-independent, no rand() seed drift.
-
-    Feed the result (plus any base alphabet) to :func:`bpe_pattern` /
-    :func:`bpe_token_count` for the distributed encoding pass. At 100
-    TB the sample clause is unchanged: TABLESAMPLE-like pushdown is
-    unnecessary because the md5 ranking prunes to ``sample`` rows in
-    one TakeOrdered."""
-    from .similarity import _check_sample_n
-
-    _check_sample_n("learn_bpe_merges", sample)
-    rows = (df.select(F.col(text_col).alias("t"),
-                      F.md5(F.col(id_col).cast("string")).alias("_r"))
-            .orderBy("_r").limit(sample).collect())
-    return learn_bpe_merges_py([r["t"] for r in rows],
-                               n_merges=n_merges, min_count=min_count)
-
-
 # --- rolling-hash winnowing fingerprint (pandas/Arrow stage) ---------------
 
 _B, _WIN, _GRAM = 257, 8, 16

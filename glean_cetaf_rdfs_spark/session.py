@@ -1,9 +1,10 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode knobs mirror what a cluster deployment would set per-executor:
-AQE on (runtime coalesce + skew-join), Arrow on (all UDFs are
-pandas/Arrow-vectorized), shuffle partitions sized to cores rather than
-the 200 default, UTC session TZ so DuckDB oracle comparisons are stable.
+AQE on (skew-join; partition coalescing off, see get_spark), Arrow on
+(all UDFs are pandas/Arrow-vectorized), shuffle partitions sized to
+cores rather than the 200 default, UTC session TZ so DuckDB oracle
+comparisons are stable.
 """
 
 from __future__ import annotations

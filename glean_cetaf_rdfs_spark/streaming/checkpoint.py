@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ..data import vocab as V
+from ..operators.link import event_entities
 from ..operators.materialize import finalize_triples, write_graph_table
 from ..plans.pipeline import build_triples
 from ..session import local_frame
@@ -77,12 +79,15 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
     with ``spark.read.parquet(out_path)`` — bucket subdirs are unified by
     partition discovery.
 
-    INVARIANT (weaker than the one-shot path): entity-level triples for
-    an entity mentioned in several buckets are physically duplicated
-    across ``bucket=K`` partitions — the unified read is set-equal to the
-    one-shot output but not row-unique. Run :func:`compact_buckets` once
-    after all buckets are done to restore the
-    ``dropDuplicates(graph,subj,pred,obj)`` invariant.
+    The unified read is NOT the one-shot output until
+    :func:`compact_buckets` has run once after all buckets are done:
+
+    * entity-level triples for an entity mentioned in several buckets
+      are physically duplicated across ``bucket=K`` partitions, and
+    * the G2 retraction (no ``dcterms:conformsTo <CSPP>`` for an entity
+      any Event-typed turn mentions) only sees the bucket's own Event
+      turns, so an entity that an Event turn mentions in one bucket and
+      a plain turn mentions in another keeps an extra ``conformsTo`` row.
     """
     done = done_buckets(spark, ckpt_path, run_id)
     completed = 0
@@ -114,6 +119,11 @@ def compact_buckets(spark: SparkSession, bucketed_path: str,
     path's row-uniqueness invariant (entity-level enrichment triples can
     be physically duplicated across ``bucket=K`` partitions).
 
+    It also applies the G2 retraction globally: the unified output holds
+    every canonical ``schema:mentions`` row and every ``rdf:type Event``
+    row, so :func:`event_entities` over it is the one-shot event set,
+    and ``(e, conformsTo, CSPP)`` rows for those entities are dropped.
+
     The dedupe goes through :func:`finalize_triples` (round 6): the
     stored ``graph`` column is DROPPED before the exchange and re-derived
     from ``subj`` on the survivors — ``graph`` is the same deterministic
@@ -121,8 +131,12 @@ def compact_buckets(spark: SparkSession, bucketed_path: str,
     output is bit-identical while the compaction's one wide shuffle
     carries one fewer string column (the same ~quarter-payload narrowing
     finalize_triples gives the one-shot pipeline)."""
+    bucketed = (spark.read.parquet(bucketed_path)
+                .select("subj", "pred", "obj", "obj_is_iri"))
+    retracted = event_entities(bucketed).select(
+        F.col("entity").alias("subj"), F.lit(V.P_CONFORMS_TO).alias("pred"),
+        F.lit(V.O_CSPP).alias("obj"))
     unified = finalize_triples(
-        spark.read.parquet(bucketed_path)
-        .select("subj", "pred", "obj", "obj_is_iri"))
+        bucketed.join(retracted, ["subj", "pred", "obj"], "left_anti"))
     write_graph_table(unified, final_path)
     return spark.read.parquet(final_path)

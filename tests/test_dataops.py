@@ -141,9 +141,6 @@ def test_multimodal_metadata_plumbing(spark, docs):
     assert bad_meta[0]["n_bytes"] == 0 and bad_meta[0]["sha256"] is not None
     assert bad_meta[0]["width"] is None and bad_meta[0]["duration_ms"] is None
 
-    plan = MM.resize_plan(meta, max_side=512)
-    over = plan.filter((F.col("out_width") > 512) & (F.col("out_height") > 512))
-    assert over.count() == 0
     meta.unpersist()
 
 
@@ -203,6 +200,12 @@ def test_embedding_bucketed_pairs_subset_of_exact(embs):
         assert exact[k] == v
 
 
+def _column_bucket(spark, vec: list[float], planes) -> str:
+    """The bucket Spark assigns ``vec`` via lsh_bucket_of, the write side."""
+    return (spark.createDataFrame([(vec,)], "v array<double>")
+            .select(S.lsh_bucket_of(F.col("v"), planes).alias("b")).first()["b"])
+
+
 def test_materialized_bucket_table_prunes_partitions(spark, embs, tmp_path):
     """The ANN scale path: probe against the partitionBy(bucket) table
     must (a) push the bucket filter into PartitionFilters — reading one
@@ -215,8 +218,7 @@ def test_materialized_bucket_table_prunes_partitions(spark, embs, tmp_path):
     probe = S.bucketed_table_topk(spark, path, q, k=10, n_planes=4)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    planes = S.plane_weights(len(q), 4)
-    qb = S.query_bucket(q, planes)
+    qb = _column_bucket(spark, q, S.plane_weights(len(q), 4))
     assert qb in plan  # the literal bucket value reached the scan
     want = [(r["id"], r["cos"]) for r in
             S.lsh_bucket_topk(embs, "vec_id", "embedding", q, k=10).collect()]
@@ -264,13 +266,14 @@ def test_multiprobe_recall_on_materialized_table(spark, tmp_path):
     assert one <= set(got) | (one - set(exact))
 
 
-def test_probe_buckets_sequence_deterministic():
-    """First probe = the query's own bucket; flips ordered by ascending
-    margin; capped at n_planes+1 distinct buckets."""
+def test_probe_buckets_sequence_deterministic(spark):
+    """First probe = the query's own bucket as the Column form computes
+    it; flips ordered by ascending margin; capped at n_planes+1
+    distinct buckets."""
     planes = S.plane_weights(4, 4)
     q = [1.0, 0.5, -0.25, 2.0]
     seq = S.probe_buckets(q, planes, n_probe=5)
-    assert seq[0] == S.query_bucket(q, planes)
+    assert seq[0] == _column_bucket(spark, q, planes)
     assert len(seq) == len(set(seq)) == 5
     for b in seq[1:]:  # every later probe is a 1-bit flip of the base
         assert sum(x != y for x, y in zip(b, seq[0])) == 1
@@ -452,175 +455,9 @@ def test_corpus_stats_approx_tracks_exact(spark, docs):
             assert abs(a[col] - e[col]) <= max(3.0, 0.05 * e[col]), (lang, col)
 
 
-def test_embedding_dup_clusters_planted(spark):
-    """Cluster-level embedding dedup: overlapping near-dup pairs
-    (a~b, b~c) collapse to ONE cluster with ONE survivor (min id) —
-    the over-deletion case pair-level dedup gets wrong — and
-    singletons survive as their own canonical."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    base_a = rng.normal(size=16)
-    base_b = rng.normal(size=16)
-    rows = []
-    for i, (base, eps) in enumerate([(base_a, 0.0), (base_a, 1e-3),
-                                     (base_a, 2e-3), (base_b, 0.0),
-                                     (base_b, 1e-3)]):
-        v = base + eps * rng.normal(size=16)
-        rows.append((i + 1, [float(x) for x in v]))
-    rows.append((9, [float(x) for x in rng.normal(size=16)]))   # singleton
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["id"]: r for r in
-           D.embedding_dup_clusters(df, "vec_id", "embedding", 0.99,
-                                    n_planes=4, n_bands=8).collect()}
-    assert len(out) == 6                       # every input row covered
-    assert {i: out[i]["canonical"] for i in (1, 2, 3)} == {1: 1, 2: 1, 3: 1}
-    assert {i: out[i]["canonical"] for i in (4, 5)} == {4: 4, 5: 4}
-    assert out[9]["canonical"] == 9 and out[9]["is_survivor"]
-    assert [i for i in out if out[i]["is_survivor"]] == [1, 4, 9]
-
-
-def test_quantized_table_topk_tracks_float_and_prunes(spark, embs, tmp_path):
-    """int8 bucket table vs the FLOAT bucket table over the IDENTICAL
-    probe set (bucket assignment is computed on the float vector at
-    write, so the candidate pools match exactly): (a) quantization may
-    swap near-ties but must never surface a genuinely worse vector —
-    every int8 pick scores within 0.005 float-cosine of the float
-    probe's 10th-best, and per-id cos agrees within 0.005, (b) a
-    1-bucket probe is partition-pruned, (c) stored vectors really are
-    tinyint (quarter width)."""
-    q = [r for r in embs.select("embedding")
-         .filter(F.col("vec_id") == 0).collect()][0][0]
-    fpath, qpath = str(tmp_path / "ftable"), str(tmp_path / "qtable")
-    S.write_bucketed_embeddings(embs, "vec_id", "embedding", fpath,
-                                n_planes=4)
-    S.write_quantized_embeddings(embs, "vec_id", "embedding", qpath,
-                                 n_planes=4)
-    fl = {r["id"]: r["cos"] for r in
-          S.bucketed_table_topk(spark, fpath, q, k=30, n_planes=4,
-                                n_probe=5).collect()}
-    qt = [(r["id"], r["cos"]) for r in
-          S.quantized_table_topk(spark, qpath, q, k=10, n_planes=4,
-                                 n_probe=5).collect()]
-    kth = sorted(fl.values(), reverse=True)[9]
-    assert qt[0][0] == 0                       # top-1 immune to rounding
-    for vid, qcos in qt:
-        assert vid in fl and fl[vid] >= kth - 0.005, vid
-        assert abs(qcos - fl[vid]) <= 0.005, (vid, qcos, fl[vid])
-    pruned_df = S.quantized_table_topk(spark, qpath, q, k=10, n_planes=4,
-                                       n_probe=1)
-    plan = pruned_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "bucket" in plan
-    qv_field = [f for f in spark.read.parquet(qpath).schema.fields
-                if f.name == "qv"][0]
-    assert "tinyint" in qv_field.dataType.simpleString()
-
-
-def test_pq_adc_tracks_exact_cosine(spark, embs):
-    """PQ codes + ADC approximate cosine: strong rank correlation with
-    the exact float scores and substantial top-10 overlap — on the
-    ISOTROPIC fixture, PQ's worst case (docstring on pq_train)."""
-    import numpy as np
-
-    q = [float((i * 7) % 13 - 6) for i in range(64)]
-    books = S.pq_train(embs, "vec_id", "embedding")
-    assert books.shape == (16, 64, 4)
-    exact = {r["id"]: r["cos"] for r in
-             S.cosine_topk(embs, "vec_id", "embedding", q,
-                           k=embs.count()).collect()}
-    codes = S.pq_encode(embs, "vec_id", "embedding", books)
-    adc_rows = S.pq_adc_topk(codes, q, books, k=len(exact)).collect()
-    adc = {r["id"]: r["adc"] for r in adc_rows}
-    common = sorted(set(adc) & set(exact))
-    corr = np.corrcoef([adc[i] for i in common],
-                       [exact[i] for i in common])[0, 1]
-    assert corr > 0.8
-    top_exact = set(sorted(exact, key=exact.get, reverse=True)[:10])
-    top_adc = {r["id"] for r in adc_rows[:10]}
-    assert len(top_exact & top_adc) >= 4
-
-
-def test_pq_encode_deterministic_and_tinyint(spark, embs):
-    books = S.pq_train(embs, "vec_id", "embedding")
-    one = {r["id"]: list(r["codes"]) for r in
-           S.pq_encode(embs, "vec_id", "embedding", books).collect()}
-    two = {r["id"]: list(r["codes"]) for r in
-           S.pq_encode(embs.repartition(7), "vec_id", "embedding",
-                       books).collect()}
-    assert one == two
-    assert all(len(c) == 16 and all(0 <= x < 64 for x in c)
-               for c in one.values())
-    f = dict(S.pq_encode(embs, "vec_id", "embedding", books)
-             .dtypes)["codes"]
-    assert f == "array<tinyint>"
-
-
-def test_pq_table_prunes_and_matches_inline(spark, embs, tmp_path):
-    """The bucketed PQ table returns the same top-k as inline ADC
-    restricted to the probed buckets, with PartitionFilters pruning."""
-    q = [float((i * 5) % 11 - 5) for i in range(64)]
-    books = S.pq_train(embs, "vec_id", "embedding")
-    path = str(tmp_path / "pq")
-    S.write_pq_codes(embs, "vec_id", "embedding", path, books)
-    got = S.pq_table_topk(spark, path, q, books, k=5, n_probe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "bucket" in plan
-    table_ids = [r["id"] for r in got.collect()]
-    planes = S.plane_weights(64, 4)
-    probes = S.probe_buckets(q, planes, 2)
-    inline = (S.pq_encode(embs, "vec_id", "embedding", books)
-              .join(embs.select(F.col("vec_id").alias("id"),
-                                S.lsh_bucket_of(F.col("embedding"),
-                                                planes).alias("b")), "id")
-              .filter(F.col("b").isin(probes)))
-    inline_ids = [r["id"] for r in
-                  S.pq_adc_topk(inline, q, books, k=5).collect()]
-    assert table_ids == inline_ids and len(table_ids) > 0
-
-
-def test_pq_train_rejects_non_tinyint_codes(spark, embs):
-    with pytest.raises(ValueError, match="tinyint"):
-        S.pq_train(embs, "vec_id", "embedding", m=16, k_codes=200)
-    with pytest.raises(ValueError, match="divisible"):
-        S.pq_train(embs, "vec_id", "embedding", m=7)
-
-
 def test_train_sample_caps_raise(spark, embs):
     """Round-6 guard: driver-side training collects are capped —
     sample_n past MAX_TRAIN_SAMPLE raises instead of silently becoming
     a driver OOM (VERDICT r5 #4 latent item)."""
-    import pytest
-
-    from glean_cetaf_rdfs_spark.operators import textops as T
-
     with pytest.raises(ValueError, match="sample_n=200000 exceeds"):
         S.ivf_centroids(embs, "vec_id", "embedding", sample_n=200_000)
-    with pytest.raises(ValueError, match="pq_train"):
-        S.pq_train(embs, "vec_id", "embedding", sample_n=1_000_000)
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="learn_bpe_merges"):
-        T.learn_bpe_merges(docs, "doc_id", "text", sample=500_000)
-
-
-def test_quantize_and_pq_encode_id_types_and_nulls(spark, embs):
-    """ADVICE r5: string doc ids survive quantize/pq_encode (id type
-    follows the input schema) and a NULL vector raises a clear error
-    instead of an opaque numpy crash."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    sdf = embs.limit(8).select(
-        F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("sid"),
-        "embedding")
-    q = S.quantize_embeddings(sdf, "sid", "embedding")
-    rows = q.collect()
-    assert len(rows) == 8 and rows[0]["id"].startswith("doc-")
-    books = S.pq_train(embs, "vec_id", "embedding", m=8, k_codes=16,
-                       sample_n=64)
-    enc = S.pq_encode(sdf, "sid", "embedding", books).collect()
-    assert len(enc) == 8 and enc[0]["id"].startswith("doc-")
-    nul = spark.createDataFrame(
-        [(1, [0.1] * 4), (2, None)],
-        "vec_id long, embedding array<double>")
-    with pytest.raises(Exception, match="NULL 'embedding'"):
-        S.quantize_embeddings(nul, "vec_id", "embedding").collect()

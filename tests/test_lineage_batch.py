@@ -73,6 +73,46 @@ def test_compact_buckets_restores_uniqueness(spark, tiny_df, tmp_path):
     assert compacted.count() == len(want)  # row-unique, not just set-equal
 
 
+def test_compact_buckets_applies_g2_across_buckets(spark, tmp_path):
+    """G2 is one-shot: an Event turn in one bucket retracts the CSPP
+    ``conformsTo`` row that a plain turn's mention of the same entity
+    in another bucket generates. Per bucket the retraction cannot see
+    the other bucket's Event turn; compaction must apply it."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from glean_cetaf_rdfs_spark.data import vocab as V
+    from glean_cetaf_rdfs_spark.oracle import oracle_triples
+    from glean_cetaf_rdfs_spark.streaming.checkpoint import bucket_of
+
+    n_buckets = 2
+    ids = spark.createDataFrame([(f"conv-{i}",) for i in range(16)], "conv_id string")
+    bucket = dict(ids.select("conv_id", bucket_of(F.col("conv_id"), n_buckets))
+                  .collect())
+    ev_conv = next(c for c, b in bucket.items() if b == 0)
+    plain_conv = next(c for c, b in bucket.items() if b == 1)
+    url = "https://boz.herbaria.example/specimen/7"
+    ts = dt.datetime(2024, 1, 1)
+    pdf = pd.DataFrame(
+        [(ev_conv, 0, "user", f"eventtype=Event at {url}", None, ts),
+         (plain_conv, 0, "user", f"see {url}", None, ts)],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    df = spark.createDataFrame(pdf, "conv_id string, turn_idx int, role string, "
+                                    "text string, tool string, ts timestamp")
+    out = str(tmp_path / "bkt")
+    run_resumable(spark, df, out, str(tmp_path / "ck"), run_id="g2", n_buckets=n_buckets)
+    conforms = (F.col("subj") == url) & (F.col("pred") == V.P_CONFORMS_TO)
+    assert spark.read.parquet(out).filter(conforms).count() == 1  # plain bucket's
+    compacted = compact_buckets(spark, out, str(tmp_path / "flat"))
+    cols = ["graph", "subj", "pred", "obj", "obj_is_iri"]
+    got = {tuple(r) for r in compacted.select(*cols).collect()}
+    want = oracle_triples(pdf)
+    assert (f"http://{url.split('/')[2]}", url, V.P_INSTITUTION_ID,
+            "https://ror.org/01h1jbk91", True) in want  # the mention links
+    assert got == want
+
+
 def test_run_pipeline_gates_malformed_input(spark, tiny_df, tmp_path):
     """Malformed transcript rows (null text, negative turn_idx) must be
     quarantined — written aside, counted to lineage with the stage

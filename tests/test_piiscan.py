@@ -311,24 +311,3 @@ def test_curate_corpus_optional_gates(spark, tmp_path):
     by_stage = {r["stage"]: r for r in lrows}
     assert by_stage["contamination_gate"]["rows_dropped"] == 1
     assert by_stage["repetition_gate"]["rows_dropped"] == 1
-
-
-def test_near_contamination_gate(spark):
-    """A lightly-edited copy of an eval doc shares MinHash bands even
-    though no verbatim 5-shingle run survives intact everywhere — the
-    exact-overlap scan's blind spot. Unrelated and too-short docs stay
-    clean; both sides keep the schema and partition the input."""
-    eval_doc = ("which planet in our solar system has the most moons "
-                "and when was that count most recently revised by astronomers")
-    df = spark.createDataFrame(
-        [(1, eval_doc + " overall"),   # near-dup of the eval doc
-         (2, "a perfectly ordinary training document about spark shuffles "
-             "and partition pruning strategies for columnar scans"),
-         (3, "tiny doc")],             # too short to shingle → clean
-        "doc_id long, text string")
-    ev = spark.createDataFrame([(100, eval_doc)], "eid long, etext string")
-    clean, bad = P.near_contamination_gate(df, "doc_id", "text",
-                                           ev, "eid", "etext")
-    assert clean.columns == df.columns == bad.columns
-    assert {r["doc_id"] for r in bad.collect()} == {1}
-    assert {r["doc_id"] for r in clean.collect()} == {2, 3}

@@ -163,11 +163,11 @@ def test_canonicalize_col_parity_adversarial(spark):
     from glean_cetaf_rdfs_spark.functions.uri import (
         canonicalize_col,
         canonicalize_py,
-        match_keys_col,
         match_keys_py,
         url_domain_col,
         url_domain_py,
     )
+    from glean_cetaf_rdfs_spark.operators.link import _candidate_keys
 
     urls = [
         "http://a.example/r?to=http://b.example/x",      # embedded URL
@@ -188,7 +188,8 @@ def test_canonicalize_col_parity_adversarial(spark):
         "u",
         canonicalize_col(F.col("u")).alias("canon"),
         url_domain_col(F.col("u")).alias("dom"),
-        match_keys_col(F.col("u")).alias("keys"),
+        F.filter(F.array(*_candidate_keys(F.col("u"))),
+                 lambda k: k.isNotNull()).alias("keys"),
     ).collect()
     for r in got:
         assert r["canon"] == canonicalize_py(r["u"]), r["u"]

@@ -181,43 +181,6 @@ def test_new_query_plan_shapes(spark):
     assert "BroadcastHashJoin" in rates_plan            # rates side broadcast
 
 
-def test_learn_bpe_merges_py_planted():
-    """Hand-traced merge sequence on a planted corpus, deterministic
-    tiebreak, and the min_count stop."""
-    from glean_cetaf_rdfs_spark.operators.textops import learn_bpe_merges_py
-
-    merges = learn_bpe_merges_py(["aaab aaab", "aaab"], n_merges=5)
-    # round 1: (a,a) x6 beats (a,b) x3 -> "aa"; round 2: ("aa","a") x3
-    # ties ("a","b") x3, tiebreak by pair -> "aaa"; round 3 -> "aaab"
-    assert merges == ["aa", "aaa", "aaab"]
-    # all-unique words never reach min_count=2
-    assert learn_bpe_merges_py(["abc def"], n_merges=3) == []
-    assert learn_bpe_merges_py([], n_merges=3) == []
-    assert learn_bpe_merges_py([None], n_merges=3) == []
-
-
-def test_learn_bpe_merges_spark_deterministic_and_effective(spark):
-    """The sampled learner is partition-order-independent, and feeding
-    its merges to the distributed encoder compresses the planted word
-    to one token."""
-    from glean_cetaf_rdfs_spark.operators.textops import (
-        bpe_token_count, learn_bpe_merges)
-
-    rows = [(i, "aaab aaab aaab") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    m1 = learn_bpe_merges(df, "doc_id", "text", n_merges=4)
-    m2 = learn_bpe_merges(df.repartition(7), "doc_id", "text", n_merges=4)
-    assert m1 == m2 and "aaab" in m1
-    base = {r["id"]: r["n_bpe_tokens"] for r in
-            bpe_token_count(df, "doc_id", "text", vocab=[" "]).collect()}
-    learned = {r["id"]: r["n_bpe_tokens"] for r in
-               bpe_token_count(df, "doc_id", "text",
-                               vocab=m1 + [" "]).collect()}
-    assert base[0] == len("aaab aaab aaab")  # char fallback
-    assert learned[0] == 5                   # 3 words + 2 spaces
-    assert all(learned[i] <= base[i] for i in learned)
-
-
 def test_pack_sequences_carry_tokens(spark):
     """carry_tokens=True appends the input count as n_tokens (round-6:
     lets fill accounting aggregate the packing output instead of
