@@ -10,8 +10,9 @@ extraction output — no shuffle, no Python):
 * empty-literal triples dropped (P4 — JACQ.sh:360),
 * technical ``?format=`` mentions dropped (P5 — Finland.sh:422-428),
 * where the rewrite changed the IRI, an ``(alias, owl:sameAs, canonical)``
-  triple is emitted — the edge set the connected-components stage
-  consumes.
+  triple is emitted into the graph table. The rewrite itself is the
+  canonical ID: the KG path has no connected-components step (one pass
+  of the rule chain, as the reference's sed dictionary applies it).
 """
 
 from __future__ import annotations

@@ -113,24 +113,24 @@ def run_resumable(spark: SparkSession, transcripts: DataFrame, out_path: str,
 
 def compact_buckets(spark: SparkSession, bucketed_path: str,
                     final_path: str) -> DataFrame:
-    """Cross-bucket compaction: one global
-    ``dropDuplicates(graph,subj,pred,obj)`` over the unified bucketed
-    output, rewritten as a flat graph table — restores the one-shot
-    path's row-uniqueness invariant (entity-level enrichment triples can
-    be physically duplicated across ``bucket=K`` partitions).
+    """Cross-bucket compaction: one global (subj, pred, obj) dedupe over
+    the unified bucketed output, rewritten as a flat graph table —
+    restores the one-shot path's row-uniqueness invariant (entity-level
+    enrichment triples can be physically duplicated across ``bucket=K``
+    partitions).
 
     It also applies the G2 retraction globally: the unified output holds
     every canonical ``schema:mentions`` row and every ``rdf:type Event``
     row, so :func:`event_entities` over it is the one-shot event set,
     and ``(e, conformsTo, CSPP)`` rows for those entities are dropped.
 
-    The dedupe goes through :func:`finalize_triples` (round 6): the
-    stored ``graph`` column is DROPPED before the exchange and re-derived
-    from ``subj`` on the survivors — ``graph`` is the same deterministic
-    host-prefix expression that produced it at bucket-write time, so the
-    output is bit-identical while the compaction's one wide shuffle
-    carries one fewer string column (the same ~quarter-payload narrowing
-    finalize_triples gives the one-shot pipeline)."""
+    The dedupe goes through :func:`finalize_triples`, the one-shot
+    path's exchange: the stored ``graph`` column is DROPPED before it
+    and re-derived from ``subj`` on the survivors (the same
+    deterministic host-prefix expression that produced it at
+    bucket-write time, so the output is bit-identical), and the
+    exchange's subject-derived placement key keeps each external graph
+    in one task, so the flat table gets one file per external graph."""
     bucketed = (spark.read.parquet(bucketed_path)
                 .select("subj", "pred", "obj", "obj_is_iri"))
     retracted = event_entities(bucketed).select(

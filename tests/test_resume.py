@@ -8,7 +8,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from glean_cetaf_rdfs_spark.oracle import oracle_triples
 from glean_cetaf_rdfs_spark.streaming.checkpoint import (
+    compact_buckets,
     done_buckets,
     read_checkpoint,
     run_resumable,
@@ -41,6 +43,24 @@ def test_crash_resume_equals_oneshot(spark, tiny_df, tmp_path):
     oneshot = {tuple(r) for r in build_triples(tiny_df)
                .select("graph", "subj", "pred", "obj", "obj_is_iri").collect()}
     assert resumed == oneshot
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_resume_at_every_bucket_boundary_then_compact(spark, tiny_df, tiny_pdf,
+                                                      tmp_path, k):
+    out = str(tmp_path / "graph_table")
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, tiny_df, out, ckpt, run_id="rk", n_buckets=4,
+                      fail_after_bucket=k)
+    assert len(done_buckets(spark, ckpt, "rk")) == k
+    run_resumable(spark, tiny_df, out, ckpt, run_id="rk", n_buckets=4)
+    assert len(done_buckets(spark, ckpt, "rk")) == 4
+
+    compacted = compact_buckets(spark, out, str(tmp_path / "compacted"))
+    rows = compacted.select("graph", "subj", "pred", "obj", "obj_is_iri").collect()
+    assert len(rows) == len({tuple(r) for r in rows})
+    assert {tuple(r) for r in rows} == oracle_triples(tiny_pdf)
 
 
 def test_rerun_is_noop(spark, tiny_df, tmp_path):
