@@ -4,7 +4,9 @@ One DataFrame DAG replacing the reference's 5 shell stages and their 8
 filesystem round-trips (master_RDF_fix-validate-normalize.sh:178-201):
 
     scan transcripts
-      → extract (mapInPandas, narrow)
+      → extract (narrow): text-derived rows from mapInPandas over
+        (conv_id, turn_idx, text) ∪ per-turn skeleton rows from
+        Catalyst expressions
       → canonicalize (codegen'd regexp chain, narrow)
       → link entities (broadcast dict join; 2 small shuffles)
       → enrich (generated rows, unions)

@@ -4,7 +4,17 @@ Local-mode knobs mirror what a cluster deployment would set per-executor:
 AQE on (skew-join; partition coalescing off, see get_spark), Arrow on
 (all UDFs are pandas/Arrow-vectorized), shuffle partitions sized to
 cores rather than the 200 default, UTC session TZ so DuckDB oracle
-comparisons are stable.
+comparisons are stable (and the extraction stage's ``created`` literals
+are UTC).
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on,
+every ``F.*`` and DataFrame call pays extra py4j round trips to record
+its Python stack: a ``run_pipeline`` over 10k turns made ~6,600 py4j
+calls with it on and ~2,950 off, and turning it off alone cut the run's
+wall time by ~7% (2.05 → 1.91 s, 4-core host). The trade-off: a Spark
+error no longer names the Python line of the failing ``F.*`` call; the
+error message and the JVM stack trace are unchanged.
 """
 
 from __future__ import annotations
@@ -139,6 +149,8 @@ def get_spark(
         # every shuffle into an IO queue; on a real cluster this is the
         # executors' local NVMe (or a remote shuffle service)
         .config("spark.local.dir", _scratch_dir())
+        # per-call Python call-site capture off (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

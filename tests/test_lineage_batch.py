@@ -187,3 +187,34 @@ def test_resumable_lineage_one_row_per_bucket(spark, tiny_df, tmp_path):
     assert sorted(r["partition_key"] for r in rows) == ["0", "1", "2"]
     assert {r["stage"] for r in rows} == {"materialize"}
     assert _data_files(ck) == 3
+
+
+def test_gate_counted_once(spark, tiny_df, tmp_path):
+    """Extraction scans the gated turns twice (the text UDF and the
+    skeleton branch); the gate row still counts each turn once, with
+    and without a quarantine path, and per bucket of ``run_resumable``
+    a ``run_pipeline`` over that bucket's turns gates exactly its turns
+    and writes the resumable bucket's ``materialize`` row."""
+    from glean_cetaf_rdfs_spark.streaming.checkpoint import bucket_of
+
+    def gate_and_mat(df, name, **kw):
+        ck = str(tmp_path / f"lin_{name}")
+        run_pipeline(spark, df, str(tmp_path / f"g_{name}"), lineage_path=ck, **kw)
+        rows = {r["stage"]: r for r in spark.read.parquet(ck).collect()}
+        return rows["gate"], rows["materialize"]
+
+    n_turns = tiny_df.count()
+    for kw in ({}, {"quarantine_path": str(tmp_path / "quar")}):
+        gate, _ = gate_and_mat(tiny_df, str(len(kw)), **kw)
+        assert (gate["rows_in"], gate["rows_out"]) == (n_turns, n_turns)
+
+    n_buckets, ck = 2, str(tmp_path / "ck")
+    run_resumable(spark, tiny_df, str(tmp_path / "bkt"), ck, run_id="gc",
+                  n_buckets=n_buckets)
+    resumed = {int(r["partition_key"]): r for r in spark.read.parquet(ck).collect()}
+    for b in range(n_buckets):
+        part = tiny_df.filter(bucket_of(F.col("conv_id"), n_buckets) == b)
+        gate, mat = gate_and_mat(part, f"b{b}")
+        assert gate["rows_out"] == part.count() > 0
+        assert ((mat["rows_in"], mat["rows_out"])
+                == (resumed[b]["rows_in"], resumed[b]["rows_out"]))

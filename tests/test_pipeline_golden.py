@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df, transcripts_pdf
 from glean_cetaf_rdfs_spark.oracle import oracle_triples
-from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
+from glean_cetaf_rdfs_spark.plans.pipeline import build_triples, run_pipeline
 
 
 def _spark_triple_set(df):
@@ -67,3 +67,38 @@ def test_output_deduped_and_graph_consistent(spark, tiny_df):
     ).count()
     assert bad == 0
     final.unpersist()
+
+
+def test_null_role_and_ts_match_oracle(spark, tmp_path):
+    """A turn with a null role and a turn with a null ts pass the input
+    gate; neither gets a roleName / created row (no ``"NaTZ"`` literal,
+    no row with a null object), the output equals the oracle exactly,
+    and every lineage row balances against the written table."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from glean_cetaf_rdfs_spark.data.synthetic import TRANSCRIPT_SCHEMA
+    from glean_cetaf_rdfs_spark.functions.extraction_rules import extract_turn_triples
+
+    pdf = pd.DataFrame(
+        [("n-1", 0, None, "see http://a.example/x", None, dt.datetime(2024, 1, 1)),
+         ("n-1", 1, "tool", 'note="" lat=1.5 long=2.5', "calc", None),
+         ("n-2", 0, "user", "plain", None, dt.datetime(2024, 1, 2))],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    out, lin = str(tmp_path / "g"), str(tmp_path / "lin")
+    final = run_pipeline(spark, spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA), out,
+                         lineage_path=lin)
+    want = oracle_triples(pdf)
+    assert _spark_triple_set(final) == want
+    assert not any(o is None or o == "NaTZ" for _, _, _, o, _ in want)
+    rows = {r["stage"]: r for r in spark.read.parquet(lin).collect()}
+    assert all(r["rows_in"] == r["rows_out"] + r["rows_dropped"] for r in rows.values())
+    assert rows["gate"]["rows_out"] == len(pdf)
+    raw = [t for r in pdf.itertuples(index=False)
+           for t in extract_turn_triples(r.conv_id, r.turn_idx, r.role, r.text,
+                                         r.tool, r.ts)]
+    ec = rows["extract_canonicalize"]
+    assert ec["rows_in"] == len(raw)
+    assert ec["rows_dropped"] == 1  # the note="" row (P4)
+    assert rows["materialize"]["rows_out"] == final.count() == len(want)

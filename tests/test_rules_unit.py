@@ -229,40 +229,53 @@ def test_canonicalize_col_parity_property(spark):
     check()
 
 
-def test_ts_literal_vectorized_parity():
-    """The Arrow extraction stage pre-formats created-timestamps with
-    numpy (datetime64[s] cast + datetime_as_string — round-6: per-row
-    strftime was 30% of extraction CPU); the vectorized form must be
-    bit-identical to ts_literal for tz-aware, tz-naive, and sub-second
-    inputs, and ts_literal must pass a pre-formatted string through."""
+def test_skeleton_column_matches_turn_skeleton_triples(spark):
+    """The Catalyst skeleton (operators/extract.skeleton_triples) equals
+    ``turn_skeleton_triples`` row by row, as an exact multiset, on
+    adversarial keys, tools, roles and timestamps: URI-hostile conv_ids
+    (one makes the conv URI a doubled URL), ``if tool:`` falsy tools,
+    an empty role, null role and ts (no row), tz-naive and tz-aware
+    instants, sub-second truncation before and after 1970, and the
+    turn_idx extremes."""
     import datetime as dt
+    from collections import Counter
 
-    import numpy as np
-    import pandas as pd
+    from glean_cetaf_rdfs_spark.data import vocab as V
+    from glean_cetaf_rdfs_spark.data.synthetic import TRANSCRIPT_SCHEMA
+    from glean_cetaf_rdfs_spark.functions.extraction_rules import (
+        turn_skeleton_triples,
+    )
+    from glean_cetaf_rdfs_spark.operators.extract import skeleton_triples
+    from glean_cetaf_rdfs_spark.session import local_frame
 
-    from glean_cetaf_rdfs_spark.functions.extraction_rules import ts_literal
-
+    utc = dt.timezone.utc
+    conv_ids = ["a b", "x[1", "c&amp;d", "q?format=json", V.conv_uri("d")]
+    tools = [None, "", "a b"]
+    roles = ["user", "", None]
     stamps = [
-        pd.Timestamp("2024-01-01 10:20:30"),
-        pd.Timestamp("2024-01-01 10:20:30.999999"),   # truncation, not rounding
-        pd.Timestamp("1999-12-31 23:59:59.5"),
-        pd.Timestamp("2024-06-30 00:00:00"),
+        dt.datetime(2024, 1, 1, 10, 20, 30),                       # tz-naive UTC
+        dt.datetime(2024, 1, 1, 10, 20, 30, tzinfo=dt.timezone(dt.timedelta(hours=5))),
+        dt.datetime(2024, 6, 30, 23, 59, 59, 999999, tzinfo=utc),  # truncated
+        dt.datetime(1969, 12, 31, 23, 59, 59, 500000),             # pre-1970
+        dt.datetime(1901, 3, 4, 5, 6, 7, 250000, tzinfo=utc),
+        None,
     ]
-    for tz in (None, "UTC"):
-        s = pd.Series(stamps)
-        if tz:
-            s = s.dt.tz_localize("UTC")
-            naive = s.dt.tz_convert("UTC").dt.tz_localize(None)
-        else:
-            naive = s
-        vec = np.char.add(
-            np.datetime_as_string(naive.to_numpy().astype("datetime64[s]"),
-                                  unit="s"), "Z")
-        assert list(vec) == [ts_literal(t) for t in s]
-    # datetime (oracle path) agrees too, and strings pass through
-    d = dt.datetime(2024, 3, 4, 5, 6, 7, tzinfo=dt.timezone.utc)
-    assert ts_literal(d) == "2024-03-04T05:06:07Z"
-    assert ts_literal("2024-03-04T05:06:07Z") == "2024-03-04T05:06:07Z"
+    keys = [(c, i) for c in conv_ids for i in (0, 2**31 - 1, 7)]
+    rows = [(cid, idx, roles[k // 3 % 3], "text", tools[k % 3], stamps[k % 6])
+            for k, (cid, idx) in enumerate(keys)]
+    # pyarrow 16 reads a tz-aware datetime's wall clock and drops a
+    # non-UTC offset, so the Spark input gets the same instants in UTC
+    spark_rows = [r[:5] + (r[5].astimezone(utc) if r[5] and r[5].tzinfo else r[5],)
+                  for r in rows]
+    got = Counter(tuple(r) for r in skeleton_triples(
+        local_frame(spark, spark_rows, TRANSCRIPT_SCHEMA))
+        .select("subj", "pred", "obj", "obj_is_iri").collect())
+    want = Counter(t for cid, idx, role, _, tool, ts in rows
+                   for t in turn_skeleton_triples(cid, idx, role, tool, ts))
+    assert got == want
+    # 4 rows a turn, less 3 null roles and 2 null ts, plus 5 "a b" tools
+    assert sum(want.values()) == 4 * len(rows) - 3 - 2 + 5
+    assert "1969-12-31T23:59:59Z" in {o for _, _, o, _ in want}
 
 
 def test_generator_fixture_hash_frozen():

@@ -258,7 +258,7 @@ n_convs = {n_convs}
 tag = hashlib.md5(str(gen_conversation(0)).encode()).hexdigest()[:8]
 path = _scratch_dir() + f"/scaling_transcripts_{n_convs}_{{tag}}.parquet"
 if not os.path.exists(path + "/_SUCCESS"):
-    spark = get_spark("gen", master="local[32]")
+    spark = get_spark("gen")  # cores from the host (get_spark's default)
     transcripts_df(spark, n_convs, partitions=128).write.mode("overwrite").parquet(path)
 print("generated")
 """
