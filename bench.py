@@ -1,11 +1,16 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Master, shuffle partitions and heap are ``get_spark``'s host defaults.
+The N vs 4N scaling pair (``tools/bench_scaling.py``) follows unless
+SPARK_GRAFT_SKIP_SCALING=1. The whole run fits ``BUDGET_S``.
+
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys: kg_triples, kg_triples_per_sec (the north-rule throughput
-number measured over the KG pipeline leg), rows per query.
+number measured over the KG pipeline leg), host (nproc, MemTotal, heap,
+busy fraction at start) and scaling.
 """
 
 from __future__ import annotations
@@ -20,7 +25,6 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # A Python worker dying mid-stream leaves the driver parked forever on
 # the worker socket (no Spark timeout fires in local mode — the
@@ -29,8 +33,10 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # headline query, so it NEVER fires on a slow-but-alive run, only on a
 # wedged one — the run is cancelled, recorded at the cap, and the bench
 # moves on instead of producing no artifact at all.
-PER_QUERY_TIMEOUT_S = float(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT",
-                                           "180"))
+PER_QUERY_TIMEOUT_S = 180.0
+# headline and scaling pair together: the scaling legs are sized from
+# the KG leg's measured cost to fit the time that is left of it
+BUDGET_S = 3600.0
 
 
 def timed_action(spark, fn, timeout_s: float, label: str):
@@ -94,7 +100,9 @@ HEADLINE = [
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from glean_cetaf_rdfs_spark.session import get_spark
+    from glean_cetaf_rdfs_spark.session import get_spark, host_facts
+
+    t_start = time.monotonic()
 
     # the round-4 driver artifact showed EVERY wall (headline q32 and
     # the scaling high leg) uniformly inflated by a sustained noisy
@@ -103,13 +111,8 @@ def main() -> None:
     from tools.bench_scaling import wait_for_calm
     busy0 = wait_for_calm(max_wait_s=300.0)
 
-    # heap pinned (-Xms) to avoid G1 resize churn. NO AlwaysPreTouch here:
-    # with 16 GB pre-touched, every Python-worker fork at local[32] copies
-    # the full page-table set — measured 24.8 s (vs 1.3 s) on the first
-    # mapInPandas query. The scaling legs (8/2 workers, forks in warm-up,
-    # outside the timed region) do use PreTouch.
-    spark = get_spark("bench", master=f"local[{CPUS}]",
-                      extra_conf={"spark.driver.extraJavaOptions": "-Xms16g"})
+    # master, shuffle partitions and heap from the host (get_spark)
+    spark = get_spark("bench")
     # full unfolded registry: the bench times the narrow single-path
     # queries even where the driver contract grades a two-path fold
     qs = entrymod.bench_queries()
@@ -164,26 +167,23 @@ def main() -> None:
                           "timeouts": timeouts}), flush=True)
 
     # KG throughput: triples/sec over the pipeline leg (north-rule metric)
-    kg_triples = None
-    if "q32_kg_pipeline_predicates" in rows:
-        from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df
-        from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
+    from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df
+    from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
 
-        n_convs = {"sf0.001": 60, "sf0.01": 400, "sf0.1": 2500}.get(
-            Path(SF_DIR).name, 400)
-        kg_walls, kg_triples = [], 0
-        for _ in range(3):  # median-of-3, same rationale as the headline loop
-            t0 = time.perf_counter()
-            try:
-                kg_triples = timed_action(
-                    spark,
-                    build_triples(transcripts_df(spark, n_convs)).count,
-                    PER_QUERY_TIMEOUT_S, "kg_count")
-            except Exception:  # noqa: BLE001 — hung run: record the cap
-                kg_walls.append(PER_QUERY_TIMEOUT_S)
-                continue
-            kg_walls.append(time.perf_counter() - t0)
-        timings["kg_pipeline_count"] = round(sorted(kg_walls)[1], 3)
+    n_convs = {"sf0.001": 60, "sf0.01": 400, "sf0.1": 2500}.get(
+        Path(SF_DIR).name, 400)
+    kg_walls, kg_triples = [], 0
+    for _ in range(3):  # median-of-3, same rationale as the headline loop
+        t0 = time.perf_counter()
+        try:
+            kg_triples = timed_action(
+                spark, build_triples(transcripts_df(spark, n_convs)).count,
+                PER_QUERY_TIMEOUT_S, "kg_count")
+        except Exception:  # noqa: BLE001 — hung run: record the cap
+            kg_walls.append(PER_QUERY_TIMEOUT_S)
+            continue
+        kg_walls.append(time.perf_counter() - t0)
+    timings["kg_pipeline_count"] = round(sorted(kg_walls)[1], 3)
 
     total = round(sum(timings.values()), 3)
     sf = Path(SF_DIR).name.replace("sf", "")
@@ -193,8 +193,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": int(CPUS),
-        "host_busy_at_start": busy0,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "host": dict(host_facts(), busy_at_start=busy0),
+        "kg_triples": kg_triples,
+        "kg_triples_per_sec": round(kg_triples / timings["kg_pipeline_count"], 1),
     }
     # per-query row counts ride an EARLIER line: the driver's tail
     # buffer is 2,000 chars and parses only the FINAL line — the r4
@@ -204,47 +206,32 @@ def main() -> None:
     print(json.dumps({"detail": "rows_per_query", "rows": rows}))
     print(json.dumps({"detail": "headline_timings", "queries": timings,
                       "total": total}), flush=True)
-    if kg_triples is not None:
-        result["kg_triples"] = kg_triples
-        result["kg_triples_per_sec"] = round(kg_triples / timings["kg_pipeline_count"], 1)
 
-    # north-rule two-cluster-size evidence, regenerated per round: the
-    # identical KG job at local[2] and local[8] in fresh subprocesses —
-    # the honest pair on this box (both legs CPU-bound; 4→16 saturates
-    # the single shared memory bus and 16→32 measures SMT siblings, see
-    # BENCH.md). Opt out with SPARK_GRAFT_SKIP_SCALING=1.
+    # north-rule two-cluster-size evidence, regenerated per run: the
+    # identical KG job at local[N] and local[4N] in fresh JVMs, on one
+    # input written here and removed when this process exits. The legs
+    # are sized from the KG leg's wall per conversation to fit the time
+    # left of BUDGET_S. Opt out with SPARK_GRAFT_SKIP_SCALING=1.
     if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        import subprocess
-        spark.stop()  # free the 32-thread JVM before measuring the legs
-        # 480k convs (~7.3M turns): raised from 320k after the round-4
-        # driver artifact failed the gate with EVERY high-leg wall
-        # inflated ~28% — longer legs amortize noise bursts that slip
-        # past bench_scaling's calm-host gate; the low leg is ±0.2%
-        # stable at this size
-        n_convs = int(os.environ.get("SPARK_GRAFT_SCALING_CONVS", "480000"))
+        from tools import bench_scaling
+
         try:
-            # budget covers the worst case: input gen + calm-waits +
-            # (lo 2-run + hi 4-run) legs TWICE (the under-target
-            # re-measure path) ≈ 2×(950+550)+gen+waits ≈ 3700 s typical
-            # at 480k; bench_scaling's own 5000 s deadline stops it
-            # before this 7200 s cap truncates the output
-            out = subprocess.run(
-                [sys.executable, str(REPO / "tools" / "bench_scaling.py"),
-                 str(n_convs), "2", "2", "4"],
-                capture_output=True, text=True, timeout=7200, check=True)
-            full = json.loads(out.stdout.strip().splitlines()[-1])
-            # full walls/policy detail on its own earlier line; the
-            # final line carries only the numbers the gate needs
+            deadline = t_start + BUDGET_S - 120  # room to stop and print
+            n_pair = bench_scaling.pair_convs(
+                timings["kg_pipeline_count"] / n_convs, deadline - time.monotonic())
+            src = bench_scaling.write_input(spark, n_pair)
+            spark.stop()  # free the host's cores before measuring the legs
+            full = bench_scaling.pair(src, n_pair, deadline)
+            # every wall on its own earlier line; the final line carries
+            # only the numbers the gate needs
             print(json.dumps({"detail": "scaling_full", "scaling": full}))
+            keep = ("cores", "n_turns", "n_triples", "wall_sec", "triples_per_sec")
             result["scaling"] = {
-                "n_convs": full["n_convs"],
-                "low": {k: full["low"][k] for k in
-                        ("cores", "wall_sec", "triples_per_sec")},
-                "high": {k: full["high"][k] for k in
-                         ("cores", "wall_sec", "triples_per_sec")},
-                "scaling_efficiency": full["scaling_efficiency"],
-                "target": full["target"],
-                "pass": full["pass"],
+                "n_convs": n_pair,
+                "low": {k: full["low"].get(k) for k in keep},
+                "high": {k: full["high"].get(k) for k in keep},
+                **{k: full[k] for k in
+                   ("scaling_efficiency", "target", "pass", "error")},
             }
         except Exception as e:  # noqa: BLE001 — bench must still print
             result["scaling_error"] = str(e)[:300]

@@ -24,6 +24,7 @@ import itertools
 import os
 import shutil
 import sys
+from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,25 +95,49 @@ def stage_scratch_path(spark: SparkSession, name: str) -> str:
     return path
 
 
+GIB = 1024 ** 3
+
+
+def heap_bytes(mem_total: int, n_cores: int) -> int:
+    """Default JVM heap from MemTotal: leave 2 GiB for the OS, 2 GiB for
+    scratch held in the page cache (or tmpfs) and 512 MiB per Python
+    worker, and give the JVM a third of what remains (the host may be
+    shared), within [1, 6] GiB."""
+    spare = mem_total - 4 * GIB - n_cores * GIB // 2
+    return int(min(6 * GIB, max(1 * GIB, spare // 3)))
+
+
+def host_facts() -> dict[str, int]:
+    """This host's core count, MemTotal and default driver heap (MB)."""
+    cores = len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        mem = next(int(line.split()[1]) * 1024 for line in f
+                   if line.startswith("MemTotal:"))
+    return {"nproc": cores, "mem_total_mb": mem // 2**20,
+            "heap_mb": heap_bytes(mem, cores) // 2**20}
+
+
 def get_spark(
     app_name: str = "glean_cetaf_rdfs_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a SparkSession sized from the host.
 
     ``master`` defaults to ``local[N]`` with N = ``$SPARK_GRAFT_CPUS``,
     else the cores this process may run on (``sched_getaffinity``).
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster this would be ~2-3× total executor cores; AQE coalesces down.
+    ``shuffle_partitions`` defaults to the host's core count whatever
+    ``master`` is, so sessions at different ``local[N]`` plan the same
+    job — on a real cluster this would be ~2-3× total executor cores.
+    The driver heap defaults to ``heap_bytes`` of the host;
+    ``extra_conf`` overrides it.
     """
+    host = host_facts()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or host['nproc']}]"
     if shuffle_partitions is None:
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "4"
-        shuffle_partitions = 32 if inner == "*" else max(4, int(inner))
+        shuffle_partitions = host["nproc"]
 
     if _PKG_ROOT not in sys.path:
         sys.path.insert(0, _PKG_ROOT)
@@ -139,11 +164,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        # heap sized deliberately small: G1 on a 48g+ heap with 32
-        # allocating task threads produced 200s of GC + safepoint stalls
-        # per run (10x task-time inflation); 8-16g keeps pauses short.
-        # On a real cluster this is executor memory per ~4-8 cores.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # heap from the host (heap_bytes): a fixed size overcommits a
+        # small host (a 16g heap cannot even be mapped on 16 GB) and, on
+        # a large one, G1 on a 48g heap with 32 allocating task threads
+        # stalled for minutes in GC. On a real cluster this is executor
+        # memory per ~4-8 cores.
+        .config("spark.driver.memory", f"{host['heap_mb']}m")
         # shuffle/spill scratch on tmpfs when available: the sandbox's
         # virtio disk caps at ~140 MB/s with high latency, which turns
         # every shuffle into an IO queue; on a real cluster this is the
@@ -176,7 +202,7 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     ``spark.createDataFrame(list)`` instead parallelizes the list into a
     ``PythonRDD``: every action on it runs a Python-worker job, which on
     a few-row lineage or dictionary frame costs more than the rows.
-    Naive datetimes are read as UTC."""
+    Naive datetimes are read as UTC; tz-aware ones keep their instant."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -185,6 +211,15 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow_schema)
     table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        [pa.array([_to_utc(v) for v in c] if pa.types.is_timestamp(f.type) else c,
+                  type=f.type)
+         for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema)
     return spark.createDataFrame(table, schema=schema)
+
+
+def _to_utc(v):
+    """A tz-aware ``datetime`` moved to UTC. pyarrow reads an aware value
+    into a UTC timestamp column by its wall-clock fields, so 10:20+05:00
+    would land as 10:20Z instead of 05:20Z."""
+    return v.astimezone(timezone.utc) if isinstance(v, datetime) and v.tzinfo else v

@@ -14,8 +14,7 @@ from glean_cetaf_rdfs_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4,
-                  extra_conf={"spark.driver.memory": "8g"})
+    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
 
 

@@ -1,123 +1,169 @@
-"""Watchdog/retry contract of tools/bench_scaling.run_level — pure
-subprocess-level tests (no Spark): a hung leg is killed by the
-leg-sized budget and retried once; a clean leg passes through."""
+"""The scaling harness (tools/bench_scaling.py) and bench.py's query
+watchdog. The leg tests start real ``--leg`` subprocesses, each with its
+own JVM, on a 30-conversation input."""
 
 from __future__ import annotations
 
-import json
+import os
 import subprocess
+import sys
+import time
+from pathlib import Path
 
 import pytest
 
 from tools import bench_scaling as BS
 
+REPO = Path(__file__).resolve().parents[1]
+N_CONVS = 30
 
-def test_run_level_retries_once_then_raises(monkeypatch):
-    calls = []
 
-    def fake_run(cmd, **kw):
-        calls.append(kw.get("timeout"))
-        if cmd and cmd[0] == "pkill":
-            return subprocess.CompletedProcess(cmd, 0)
-        raise subprocess.TimeoutExpired(cmd, kw.get("timeout"))
+@pytest.fixture(scope="module")
+def leg_input(spark):
+    return BS.write_input(spark, N_CONVS)
 
-    monkeypatch.setattr(BS.subprocess, "run", fake_run)
+
+def _group_exes(pgid: int) -> list[str]:
+    """Executables of the live (not zombie) processes in group ``pgid``."""
+    exes = []
+    for name in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                state, _, pgrp = f.read().rsplit(")", 1)[1].split()[:3]
+            if int(pgrp) == pgid and state != "Z":
+                exes.append(os.readlink(f"/proc/{name}/exe"))
+        except (OSError, ValueError):
+            pass  # not a pid, or exited while we read
+    return exes
+
+
+def test_legs_read_the_same_input(leg_input, monkeypatch):
+    """Both legs, each a real ``--leg`` subprocess, count the same turns
+    and triples: the pair times one job on one input."""
     monkeypatch.setattr(BS, "wait_for_calm", lambda *a, **k: 0.0)
-    with pytest.raises(subprocess.TimeoutExpired):
-        BS.run_level(2, 480_000, runs=2)
-    # two leg attempts (same budget), each followed by a JVM cleanup
-    leg_timeouts = [t for t in calls if t is not None]
-    assert len(leg_timeouts) == 2
-    # low leg at the default size: 600 + 3*2*900 = 6000 s budget
-    assert leg_timeouts == [6000, 6000]
+    res = BS.pair(leg_input, N_CONVS, deadline=time.monotonic() + 900)
+    lo, hi = res["low"], res["high"]
+    assert res["error"] is None, res
+    assert hi["cores"] == 4 * lo["cores"]
+    assert lo["n_turns"] == hi["n_turns"] > 0
+    assert lo["n_triples"] == hi["n_triples"] > 0
+    assert len(lo["walls"]) == len(hi["walls"]) == BS.RUNS
+    assert res["scaling_efficiency"] > 0
 
 
-def test_run_level_budget_scales_with_input_and_cores(monkeypatch):
+def test_leg_timeout_kills_its_jvm(leg_input, monkeypatch):
+    """A leg past its timeout is killed with its whole process group, the
+    JVM included (a JVM parked on a dead Python worker's socket never
+    exits by itself), and the leg returns the error with no walls."""
     seen = {}
+    killpg = os.killpg
 
-    def fake_run(cmd, **kw):
-        seen["timeout"] = kw["timeout"]
-        out = json.dumps({"cores": 8, "n_turns": 1, "n_triples": 1,
-                          "wall_sec": 1.0, "walls": [1.0],
-                          "triples_per_sec": 1.0, "turns_per_sec": 1.0})
-        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
+    def spy(pgid, sig):
+        seen["pgid"], seen["before"] = pgid, _group_exes(pgid)
+        killpg(pgid, sig)
 
-    monkeypatch.setattr(BS.subprocess, "run", fake_run)
+    monkeypatch.setattr(BS.os, "killpg", spy)
+    res = BS.run_leg(1, N_CONVS, 10_000, leg_input, timeout_s=30)
+    assert res["walls"] == [] and res["triples_per_sec"] is None
+    assert res["error"] == "timeout after 30 s"
+    assert any(exe.endswith("/java") for exe in seen["before"]), seen
+    for _ in range(50):  # SIGKILL is asynchronous
+        if not _group_exes(seen["pgid"]):
+            break
+        time.sleep(0.1)
+    assert _group_exes(seen["pgid"]) == []
+
+
+def test_pair_one_leg_death_keeps_other_leg(monkeypatch):
+    """Whichever leg dies, the pair keeps the other leg's walls, records
+    the error and reports no efficiency."""
     monkeypatch.setattr(BS, "wait_for_calm", lambda *a, **k: 0.0)
-    res = BS.run_level(8, 120_000, runs=4)
-    assert res["cores"] == 8 and res["host_busy_before"] == 0.0
-    # high leg at quarter size: 600 + 3*4*(400*0.25) = 1800 s
-    assert seen["timeout"] == 1800
+    low = max(1, len(os.sched_getaffinity(0)) // 4)
+    for dead in (low, 4 * low):
+        def fake(cores, n_convs, runs, src, timeout_s):
+            if cores == dead:
+                return {"cores": cores, "n_convs": n_convs, "wall_sec": None,
+                        "walls": [], "triples_per_sec": None,
+                        "error": "timeout after 9 s"}
+            return {"cores": cores, "n_convs": n_convs, "n_turns": 5,
+                    "n_triples": 20, "wall_sec": 2.0,
+                    "walls": [2.0, 1.9, 2.2], "triples_per_sec": 10.0}
+
+        monkeypatch.setattr(BS, "run_leg", fake)
+        res = BS.pair("unused", 7, deadline=time.monotonic() + 100)
+        legs = {res["low"]["cores"]: res["low"], res["high"]["cores"]: res["high"]}
+        (alive,) = (v for k, v in legs.items() if k != dead)
+        assert alive["walls"] == [2.0, 1.9, 2.2]
+        assert legs[dead]["walls"] == []
+        assert res["scaling_efficiency"] is None and res["pass"] is False
+        assert "timeout after 9 s" in res["error"]
 
 
-def test_run_level_first_failure_then_success(monkeypatch):
-    state = {"n": 0}
-
-    def fake_run(cmd, **kw):
-        if cmd and cmd[0] == "pkill":
-            state["pkilled"] = True
-            return subprocess.CompletedProcess(cmd, 0)
-        state["n"] += 1
-        if state["n"] == 1:
-            raise subprocess.TimeoutExpired(cmd, kw.get("timeout"))
-        out = json.dumps({"cores": 2, "n_turns": 5, "n_triples": 7,
-                          "wall_sec": 2.0, "walls": [2.0, 2.1],
-                          "triples_per_sec": 3.5, "turns_per_sec": 2.5})
-        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
-
-    monkeypatch.setattr(BS.subprocess, "run", fake_run)
+def test_pair_timeouts_split_time_left(monkeypatch):
+    """The 4N leg runs first and may use half the time left to the
+    deadline; the N leg gets all that remains after it."""
     monkeypatch.setattr(BS, "wait_for_calm", lambda *a, **k: 0.0)
-    res = BS.run_level(2, 480_000, runs=2)
-    assert res["n_triples"] == 7
-    assert state["pkilled"]  # the hung JVM was cleaned before the retry
+    timeouts = []
+
+    def fake(cores, n_convs, runs, src, timeout_s):
+        timeouts.append((cores, timeout_s))
+        return {"cores": cores, "n_convs": n_convs, "n_turns": 1,
+                "n_triples": 4, "wall_sec": 1.0, "walls": [1.0],
+                "triples_per_sec": 4.0}
+
+    monkeypatch.setattr(BS, "run_leg", fake)
+    res = BS.pair("unused", 7, deadline=time.monotonic() + 1000)
+    (hi, t_hi), (lo, t_lo) = timeouts
+    assert hi == 4 * lo
+    assert 495 <= t_hi <= 500 and 990 <= t_lo <= 1000
+    assert res["scaling_efficiency"] == 0.25
 
 
-def test_run_level_budget_capped_by_deadline(monkeypatch):
-    """Round-6 wall-cap fix: a caller deadline bounds the leg watchdog so
-    a hung leg cannot out-live the bench's total budget (BENCH_r05 rc
-    124); without a deadline the sized budget is unchanged."""
-    import time
-
-    seen = []
-
-    def fake_run(cmd, **kw):
-        if cmd and cmd[0] == "pkill":
-            return subprocess.CompletedProcess(cmd, 0)
-        seen.append(kw["timeout"])
-        out = json.dumps({"cores": 2, "n_turns": 1, "n_triples": 1,
-                          "wall_sec": 1.0, "walls": [1.0, 1.0],
-                          "triples_per_sec": 1.0, "turns_per_sec": 1.0})
-        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
-
-    monkeypatch.setattr(BS.subprocess, "run", fake_run)
-    monkeypatch.setattr(BS, "wait_for_calm", lambda *a, **k: 0.0)
-    BS.run_level(2, 480_000, runs=2, deadline=time.monotonic() + 1000)
-    # an exhausted budget REFUSES to start an attempt (the former 300 s
-    # floor ran attempts past the deadline — observed +600 s overrun)
-    with pytest.raises(subprocess.TimeoutExpired):
-        BS.run_level(2, 480_000, runs=2, deadline=time.monotonic() - 10)
-    BS.run_level(2, 480_000, runs=2)
-    assert 990 <= seen[0] <= 1000      # capped to remaining time
-    assert seen[1] == 6000             # no deadline → sized budget
-    assert len(seen) == 2              # exhausted-budget attempt never ran
+def test_pair_convs_fits_time_left():
+    """Input plus RUNS runs of both legs at the measured per-conversation
+    cost fit a third of the time left; more time or a cheaper pipeline
+    gives a larger input, and the input never drops below 1000 convs."""
+    for sec_per_conv, left in ((0.003, 3400.0), (0.01, 3000.0), (0.05, 8000.0)):
+        n = BS.pair_convs(sec_per_conv, left)
+        worst = n * sec_per_conv * (1 + 5 * BS.RUNS) + 2 * BS.LEG_STARTUP_S
+        assert worst <= left / 3 + 1e-6
+        assert BS.pair_convs(sec_per_conv, 2 * left) > n
+        assert BS.pair_convs(sec_per_conv / 2, left) > n
+    assert BS.pair_convs(1.0, 10.0) == 1000
 
 
-def test_effective_convs_cap(monkeypatch):
-    assert BS.effective_convs(480_000) == BS.SCALING_CONVS_CAP
-    assert BS.effective_convs(100_000) == 100_000
-
-
-def test_wait_for_calm_respects_total_budget(monkeypatch):
-    """The calm gate's TOTAL wall across calls is bounded: with the
-    budget exhausted it samples once and returns instead of blocking."""
-    import time
-
+def test_wait_for_calm_gives_up_after_max_wait(monkeypatch):
+    """On a host that never calms down the gate returns the busy fraction
+    once ``max_wait_s`` has passed instead of blocking the bench."""
     monkeypatch.setattr(BS, "host_busy_fraction", lambda *a, **k: 0.99)
-    monkeypatch.setattr(BS, "_CALM_BUDGET", [0.0])
+    monkeypatch.setattr(BS.time, "sleep", lambda s: None)
     t0 = time.monotonic()
-    busy = BS.wait_for_calm(max_wait_s=600.0)
+    assert BS.wait_for_calm(max_wait_s=0.5) == 0.99
     assert time.monotonic() - t0 < 5
-    assert busy == 0.99
+
+
+# a fixed script: writes the leg input from a fresh
+# process and exits, the way bench.py does when it finishes
+_WRITE_INPUT_AND_EXIT = """
+import os
+from glean_cetaf_rdfs_spark.session import get_spark
+from tools.bench_scaling import write_input
+
+path = write_input(get_spark("input_exit", master="local[1]"), 5)
+print(os.path.exists(path + "/_SUCCESS"), path)
+"""
+
+
+def test_leg_input_removed_at_exit():
+    """The scaling input lives under an app-scoped scratch path that is
+    removed when the writing process exits: /dev/shm is RAM, and inputs
+    left behind there outlive every run."""
+    out = subprocess.run([sys.executable, "-c", _WRITE_INPUT_AND_EXIT],
+                         cwd=REPO, capture_output=True, text=True,
+                         timeout=600, check=True)
+    written, path = out.stdout.strip().splitlines()[-1].split(" ", 1)
+    assert written == "True"
+    assert not os.path.exists(path)
 
 
 def test_timed_action_cancels_wedged_query(spark):
@@ -148,144 +194,3 @@ def test_timed_action_passthrough(spark):
 
     out = B.timed_collect(spark, spark.range(3), 60.0, "ok")
     assert len(out) == 3
-
-
-def test_main_soft_fails_with_partial_evidence(monkeypatch, capsys):
-    """Round-6: a died/overrun leg yields a parseable result line with
-    pass=false and the error recorded — never a nonzero exit that erases
-    the completed leg's evidence (the first in-bench validation lost its
-    whole scaling block to one starved leg)."""
-    import sys
-
-    lo = {"cores": 2, "n_turns": 1, "n_triples": 10, "wall_sec": 1.0,
-          "walls": [1.0, 1.0], "triples_per_sec": 10.0,
-          "turns_per_sec": 1.0}
-
-    def fake_measure(cores, n_convs, runs, deadline, **kw):
-        if cores == 2:
-            return dict(lo)
-        raise subprocess.TimeoutExpired(["leg"], 42)
-
-    monkeypatch.setattr(BS, "measure_leg", fake_measure)
-    monkeypatch.setattr(BS.subprocess, "run",
-                        lambda *a, **k: subprocess.CompletedProcess(a, 0))
-    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "480000", "2", "2", "4"])
-    BS.main()
-    out = capsys.readouterr().out.strip().splitlines()[-1]
-    res = json.loads(out)
-    assert res["pass"] is False and res["scaling_efficiency"] is None
-    assert res["low"]["triples_per_sec"] == 10.0
-    assert res["high"] == {"cores": 8, "wall_sec": None,
-                           "triples_per_sec": None, "walls": []}
-    assert "TimeoutExpired" in res["error"]
-    assert res["n_convs"] == BS.SCALING_CONVS_CAP
-
-
-def test_main_one_leg_death_keeps_other_leg(monkeypatch, capsys):
-    """Round-6 second pass: legs soft-fail INDEPENDENTLY — the high leg
-    dying must not skip the low leg (the old single try block lost
-    whichever leg came after the failure), and the high leg is measured
-    FIRST under a bounded sub-deadline so a re-batching low leg can no
-    longer starve it."""
-    import sys
-    import time
-
-    order = []
-    lo = {"cores": 2, "n_turns": 1, "n_triples": 10, "wall_sec": 1.0,
-          "walls": [1.0, 1.0], "triples_per_sec": 10.0,
-          "turns_per_sec": 1.0}
-
-    def fake_measure(cores, n_convs, runs, deadline, **kw):
-        order.append(cores)
-        if cores == 2:
-            return dict(lo)
-        # the hi sub-deadline is bounded to 40% of the budget
-        assert deadline <= time.monotonic() + 0.4 * BS.SCALING_BUDGET_S + 5
-        raise subprocess.TimeoutExpired(["leg"], 42)
-
-    monkeypatch.setattr(BS, "measure_leg", fake_measure)
-    monkeypatch.setattr(BS.subprocess, "run",
-                        lambda *a, **k: subprocess.CompletedProcess(a, 0))
-    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "480000", "2", "2", "4"])
-    BS.main()
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert order == [8, 2]  # hi first, lo still measured after hi died
-    assert res["pass"] is False and res["scaling_efficiency"] is None
-    assert res["low"]["triples_per_sec"] == 10.0
-    assert res["high"]["wall_sec"] is None
-    assert "hi TimeoutExpired" in res["error"]
-
-
-def test_measure_leg_rebatch_gate_respects_run_level_floor(monkeypatch):
-    """The re-batch gate needs max(300, 2.5 × min wall) of budget: with
-    250 s of re-batch cost but under 300 s left, run_level would refuse
-    the attempt, so measure_leg must not start it."""
-    import time
-
-    calls = []
-
-    def fake_level(cores, n_convs, runs, deadline=None):
-        calls.append(runs)
-        return {"cores": cores, "n_triples": 10, "n_turns": 1,
-                "wall_sec": 100.0, "walls": [100.0, 200.0],
-                "triples_per_sec": 0.1, "turns_per_sec": 0.01}
-
-    monkeypatch.setattr(BS, "run_level", fake_level)
-    m = BS.measure_leg(2, 1000, 2, deadline=time.monotonic() + 280)
-    assert len(calls) == 1
-    assert m["walls"] == [100.0, 200.0]
-
-
-def test_measure_leg_rebatch_failure_keeps_walls(monkeypatch):
-    """A re-batch that raises (near-deadline refusal, hung leg) returns
-    the walls already measured instead of discarding the leg."""
-    import time
-
-    calls = []
-
-    def fake_level(cores, n_convs, runs, deadline=None):
-        calls.append(runs)
-        if len(calls) > 1:
-            raise subprocess.TimeoutExpired(["leg"], 42)
-        return {"cores": cores, "n_triples": 10, "n_turns": 1,
-                "wall_sec": 1.0, "walls": [1.0, 2.0],
-                "triples_per_sec": 10.0, "turns_per_sec": 1.0}
-
-    monkeypatch.setattr(BS, "run_level", fake_level)
-    m = BS.measure_leg(2, 1000, 2, deadline=time.monotonic() + 10_000)
-    assert len(calls) == 2
-    assert m["walls"] == [1.0, 2.0] and m["wall_sec"] == 1.0
-    assert "TimeoutExpired" in m["rebatch_error"]
-
-
-def test_main_remeasure_failure_keeps_both_legs(monkeypatch, capsys):
-    """An under-target pair triggers the interleaved re-measure; when
-    that raises, the final line still carries both measured legs and
-    the error instead of main() crashing with nothing printed."""
-    import sys
-
-    calls = []
-    legs = {2: {"cores": 2, "n_turns": 1, "n_triples": 10, "wall_sec": 1.0,
-                "walls": [1.0, 1.0], "triples_per_sec": 10.0,
-                "turns_per_sec": 1.0},
-            8: {"cores": 8, "n_turns": 1, "n_triples": 10, "wall_sec": 0.5,
-                "walls": [0.5, 0.5], "triples_per_sec": 20.0,
-                "turns_per_sec": 2.0}}
-
-    def fake_measure(cores, n_convs, runs, deadline, **kw):
-        calls.append(cores)
-        if len(calls) > 2:
-            raise subprocess.TimeoutExpired(["leg"], 42)
-        return dict(legs[cores])
-
-    monkeypatch.setattr(BS, "measure_leg", fake_measure)
-    monkeypatch.setattr(BS.subprocess, "run",
-                        lambda *a, **k: subprocess.CompletedProcess(a, 0))
-    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "480000", "2", "2", "4"])
-    BS.main()
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert calls == [8, 2, 2]  # hi, lo, then the failed lo re-measure
-    assert res["low"]["walls"] == [1.0, 1.0]
-    assert res["high"]["walls"] == [0.5, 0.5]
-    assert res["scaling_efficiency"] == 0.5 and res["pass"] is False
-    assert "re-measure TimeoutExpired" in res["error"]

@@ -219,24 +219,3 @@ SELECT bucket FROM probes ORDER BY m, j LIMIT 3
 """).fetchall()]
         assert got == want, (got, want)
 
-
-def test_scaling_merge_pools_walls_and_keeps_min():
-    """bench_scaling._merge must pool wall samples across measurement
-    passes and recompute rates from the min (the noisy-host estimator
-    the scaling artifact documents)."""
-    import sys
-    from pathlib import Path as _P
-
-    sys.path.insert(0, str(_P(__file__).resolve().parents[1] / "tools"))
-    from bench_scaling import _merge
-
-    a = {"cores": 2, "n_turns": 100, "n_triples": 1000,
-         "wall_sec": 10.0, "walls": [12.0, 10.0],
-         "triples_per_sec": 100.0, "turns_per_sec": 10.0}
-    b = dict(a, wall_sec=8.0, walls=[8.0, 9.0],
-             triples_per_sec=125.0, turns_per_sec=12.5)
-    m = _merge(a, b)
-    assert m["walls"] == [12.0, 10.0, 8.0, 9.0]
-    assert m["wall_sec"] == 8.0
-    assert m["triples_per_sec"] == 125.0
-    assert m["n_triples"] == 1000 and m["cores"] == 2

@@ -72,6 +72,10 @@ def test_local_frame_reads_naive_datetimes_as_utc(spark):
 
     naive = dt.datetime(2024, 3, 1, 12, 0, 0)
     aware = naive.replace(tzinfo=dt.timezone.utc)
-    df = local_frame(spark, [(naive,), (aware,)], "t timestamp")
+    # the same instant written in two non-UTC zones keeps its instant
+    east = aware.astimezone(dt.timezone(dt.timedelta(hours=5)))
+    west = aware.astimezone(dt.timezone(dt.timedelta(hours=-8)))
+    df = local_frame(spark, [(naive,), (aware,), (east,), (west,)],
+                     "t timestamp")
     epochs = [r[0] for r in df.select(F.unix_timestamp("t")).collect()]
-    assert epochs == [int(aware.timestamp())] * 2
+    assert epochs == [int(aware.timestamp())] * 4

@@ -1,379 +1,170 @@
 """Two-parallelism-level scaling evidence (the north rule's two-cluster-size
-criterion, sandbox protocol per BASELINE.md): run the identical KG pipeline
-on identical input at local[N] and local[4N], report triples/sec at both
-and scaling efficiency (throughput_4N / throughput_N) / 4.
+criterion, sandbox protocol per BASELINE.md): the identical KG job on
+identical input at local[N] and local[4N], triples/sec at both, and the
+scaling efficiency (throughput_4N / throughput_N) / 4.
 
-Each level runs in a fresh subprocess (one SparkSession per JVM).
-Before each leg the harness waits for the HOST to look idle
-(/proc/stat busy fraction — the round-4 driver artifact failed the
-gate with every high-leg wall uniformly inflated by a sustained noisy
-neighbor), and each leg re-batches until its two smallest walls agree
-within 5% (min-wall is only trusted once reproduced).
+    python -m tools.bench_scaling --leg CORES N_CONVS RUNS INPUT
 
-Usage: python tools/bench_scaling.py [n_convs] [N] [runs_lo] [runs_hi]
-Writes JSON to stdout (one line); BENCH.md records the curated results.
+runs one leg in this fresh JVM and prints one JSON line: a session at
+local[CORES] reads the transcript parquet at INPUT, warms up on a slice,
+then times ``build_triples(...).count()`` RUNS times and reports every
+wall and their median. ``bench.py`` writes INPUT once with
+``write_input`` (the same ``transcripts_df`` its KG leg uses) and runs
+both legs through ``pair``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import signal
+import statistics
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-# Leg-size cap (round-6): bench.py passes 480k convs, raised in round 5
-# after a noisy round-4 driver run — but at 480k the full bench (headline
-# + scaling) no longer fits the driver's 3600 s wall cap (BENCH_r05.json:
-# rc 124 at wall 3601 s, final result line never printed — the scaling
-# gate went unevidenced two rounds running). The calm-host gate and the
-# per-leg consistency batching now do the noise rejection that motivated
-# 480k, and BENCH.md records 320k legs measuring 0.82-0.94 consistently
-# once the heap was pinned, so the cap restores the artifact without
-# giving up measurement quality. Override with SPARK_GRAFT_SCALING_CONVS_CAP.
-SCALING_CONVS_CAP = int(os.environ.get("SPARK_GRAFT_SCALING_CONVS_CAP",
-                                       "320000"))
-
-# Total wall budget for the whole scaling measurement (gen + calm waits +
-# all leg batches). Sized so headline (~600 s measured end-to-end incl.
-# its own calm wait and warmups) + scaling fits the 3600 s cap with
-# ~500 s margin even when one leg re-batches for consistency. The first
-# in-bench validation at 1900 s starved the high leg after a re-batched
-# low leg; 2400 s fits the observed worst case (standalone full run:
-# 1354 s) with room for one extra low-leg batch.
-# Override with SPARK_GRAFT_SCALING_BUDGET.
-SCALING_BUDGET_S = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET",
-                                        "2400"))
-
-# Calm-host waits are capped in TOTAL across the subprocess (round-5
-# worst case: up to 600 s per leg attempt × 4+ attempts = the wall cap
-# gone before any measurement). The gate still rejects sustained noise;
-# it just cannot eat the budget.
-_CALM_BUDGET = [float(os.environ.get("SPARK_GRAFT_CALM_BUDGET", "240"))]
-
-CHILD = r"""
-import hashlib, json, os, sys, time
-sys.path.insert(0, {repo!r})
-from glean_cetaf_rdfs_spark.session import get_spark
-from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df, gen_conversation
-from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
-from glean_cetaf_rdfs_spark.session import _scratch_dir
-
-cores = {cores}
-n_convs = {n_convs}
-runs = {runs}
-# shuffle partitions sized to DATA (identical at both parallelism levels —
-# only core count differs between the legs); sizing them to cores makes
-# the low-core leg sort ~10M rows/partition and spill.
-# Heap pinned (-Xms=-Xmx, pre-touched): with a lazily-grown heap the
-# 8-thread leg loses ~40% to G1 resize/GC contention (measured 49.8 s →
-# 29.0 s on the identical run); the 2-core leg is insensitive (117.7 s
-# either way). Same JVM options on both legs.
-spark = get_spark("scal", master=f"local[{{cores}}]", shuffle_partitions=128,
-                  extra_conf={{"spark.driver.extraJavaOptions":
-                               "-Xms16g -XX:+AlwaysPreTouch"}})
-# cache key includes a fixture-content tag so a generator change can't
-# silently reuse a stale input from an earlier round
-tag = hashlib.md5(str(gen_conversation(0)).encode()).hexdigest()[:8]
-path = _scratch_dir() + f"/scaling_transcripts_{n_convs}_{{tag}}.parquet"
-if not os.path.exists(path + "/_SUCCESS"):
-    # deterministic generator -> both legs see byte-identical input
-    transcripts_df(spark, n_convs, partitions=128).write.mode("overwrite").parquet(path)
-inp = spark.read.parquet(path)
-n_turns = inp.count()
-# warm: a small FULL pipeline run (incl. the dedupe exchange) so JVM/
-# codegen/Arrow/shuffle-buffer growth isn't in the measured leg
-build_triples(inp.limit(20000)).count()
-walls = []
-for _ in range(runs):  # best-of-N: the sandbox host has noisy neighbors
-    t0 = time.perf_counter()
-    n_triples = build_triples(inp).count()
-    walls.append(time.perf_counter() - t0)
-wall = min(walls)
-print(json.dumps({{"cores": cores, "n_turns": n_turns, "n_triples": n_triples,
-                   "wall_sec": round(wall, 2), "walls": [round(w,1) for w in walls],
-                   "triples_per_sec": round(n_triples / wall, 1),
-                   "turns_per_sec": round(n_turns / wall, 1)}}))
-"""
-
-
-def effective_convs(requested: int) -> int:
-    """Leg size actually measured: the caller's request bounded by
-    ``SCALING_CONVS_CAP`` (see the cap's comment — the wall-cap fix)."""
-    return min(requested, SCALING_CONVS_CAP)
+RUNS = 3              # timed runs per leg; the leg reports their median
+TARGET = 0.8          # BASELINE.md's efficiency bar: reported, not enforced
+LEG_STARTUP_S = 60.0  # JVM start, input count and warm-up, per leg
 
 
 def host_busy_fraction(settle_s: float = 3.0) -> float:
     """Fraction of host CPU time spent non-idle over a short window
     (/proc/stat deltas). With no leg running, a calm host reads ~0."""
-    import time
 
     def snap() -> tuple[int, int]:
         with open("/proc/stat") as f:
-            parts = f.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle+iowait
-        return sum(vals), idle
+            vals = [int(x) for x in f.readline().split()[1:]]
+        return sum(vals), vals[3] + vals[4]  # idle + iowait
 
     t0, i0 = snap()
     time.sleep(settle_s)
     t1, i1 = snap()
-    dt = max(t1 - t0, 1)
-    return 1.0 - (i1 - i0) / dt
+    return 1.0 - (i1 - i0) / max(t1 - t0, 1)
 
 
 def wait_for_calm(max_wait_s: float = 600.0, busy_thresh: float = 0.20) -> float:
     """Block until the host looks idle (nothing of ours runs between
-    legs, so sustained busy = noisy neighbor — the exact condition that
+    legs, so sustained busy = noisy neighbor — the condition that
     inflated every high-leg wall in the round-4 driver artifact). Gives
-    up after ``max_wait_s`` — additionally bounded by the process-wide
-    ``_CALM_BUDGET`` so repeated waits cannot consume the bench's wall
-    cap (the round-5 rc-124 failure mode) — and lets the leg run anyway;
-    returns the last observed busy fraction so the artifact records the
-    conditions."""
-    import time
-
-    t0 = time.monotonic()
-    deadline = t0 + min(max_wait_s, max(_CALM_BUDGET[0], 0.0))
+    up after ``max_wait_s`` and lets the caller run anyway; returns the
+    last observed busy fraction so the artifact records the conditions."""
+    deadline = time.monotonic() + max_wait_s
     busy = host_busy_fraction()
     while busy > busy_thresh and time.monotonic() < deadline:
         time.sleep(10)
         busy = host_busy_fraction()
-    _CALM_BUDGET[0] -= time.monotonic() - t0
     return round(busy, 3)
 
 
-def run_level(cores: int, n_convs: int, runs: int = 2,
-              deadline: float | None = None) -> dict:
-    """One leg in a fresh subprocess, with a leg-sized watchdog and ONE
-    retry: a died-mid-stream Python worker leaves the JVM parked on the
-    worker socket forever (observed: task epoll-waiting in
-    BasePythonRunner.read with the whole host idle), and the only
-    recovery is killing the JVM and re-running the leg. The watchdog is
-    sized to the leg (generous 3× margin over the worst observed
-    per-run wall scaled by n_convs) instead of one flat hour, so a hang
-    costs minutes, not the whole bench budget."""
-    import time
+def write_input(spark, n_convs: int) -> str:
+    """Write ``transcripts_df(n_convs)`` once for both legs, at an
+    app-scoped scratch path that is removed when this process exits
+    (scratch is RAM-backed /dev/shm where available)."""
+    from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df
+    from glean_cetaf_rdfs_spark.session import app_scratch_path
 
-    per_run = (900 if cores <= 2 else 400) * max(n_convs, 1) / 480_000
-    budget = int(600 + 3 * runs * per_run)  # input gen/read + runs
-    code = CHILD.format(repo=str(REPO), cores=cores, n_convs=n_convs, runs=runs)
-    last_err: Exception | None = None
-    for _attempt in range(2):
-        if deadline is not None:
-            # a hung leg may not out-live the caller's overall budget:
-            # cap the watchdog at the remaining time. An attempt with
-            # under 300 s of budget left is not started at all — the
-            # former max(300, remaining) floor let near-deadline
-            # attempts run PAST the deadline (observed: two 300 s
-            # timeouts after the budget was spent, +600 s on a run that
-            # already overran the driver's wall cap)
-            remaining = deadline - time.monotonic()
-            if remaining < 300:
-                raise last_err if last_err is not None else \
-                    subprocess.TimeoutExpired(cmd=f"scaling-leg-{cores}",
-                                              timeout=round(remaining))
-            budget = int(min(budget, remaining))
-        busy = wait_for_calm()
-        try:
-            out = subprocess.run([sys.executable, "-c", code],
-                                 capture_output=True, text=True,
-                                 timeout=budget, check=True)
-            res = json.loads(out.stdout.strip().splitlines()[-1])
-            res["host_busy_before"] = busy
-            return res
-        except (subprocess.TimeoutExpired,
-                subprocess.CalledProcessError) as e:
-            last_err = e
-            # the timeout kills the python child only; the hung JVM is
-            # a grandchild and would otherwise idle-hold 16 GB pinned
-            # heap through the retry (app name is leg-specific, so this
-            # cannot touch the headline session)
-            subprocess.run(["pkill", "-9", "-f", "spark.app.name=scal"],
-                           check=False)
-            print(json.dumps({"detail": "leg_retry", "cores": cores,
-                              "error": type(e).__name__}),
-                  file=sys.stderr, flush=True)
-    raise last_err
+    path = app_scratch_path(spark, "scaling_input")
+    transcripts_df(spark, n_convs).write.mode("overwrite").parquet(path)
+    return path
 
 
-def _consistent(walls: list[float], tol: float = 0.05) -> bool:
-    """Min-wall is trustworthy once REPRODUCED: the two smallest walls
-    within ``tol`` of each other (a single lucky/unlucky window can't
-    satisfy this)."""
-    if len(walls) < 2:
-        return False
-    a, b = sorted(walls)[:2]
-    return b <= a * (1 + tol)
+def pair_convs(sec_per_conv: float, time_left_s: float) -> int:
+    """Leg size that makes the pair take about a third of ``time_left_s``.
+    ``sec_per_conv`` is the KG pipeline's measured wall per conversation
+    at 4N cores; the N leg costs at most 4× the 4N leg, so writing the
+    input plus RUNS runs of both legs costs at most
+    ``(1 + 5 * RUNS) * sec_per_conv`` per conversation."""
+    budget = time_left_s / 3 - 2 * LEG_STARTUP_S
+    return max(1000, int(budget / (sec_per_conv * (1 + 5 * RUNS))))
 
 
-def measure_leg(cores: int, n_convs: int, runs: int,
-                deadline: float, max_batches: int = 3) -> dict:
-    """Re-measure-until-two-consistent (round-4 advice): batch until the
-    leg's two smallest walls agree within 5%, bounded by batches and the
-    caller's deadline."""
-    import time
+def leg(cores: int, n_convs: int, runs: int, src: str) -> dict:
+    """One leg in this process: the KG job on the input at ``src``."""
+    from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
+    from glean_cetaf_rdfs_spark.session import get_spark
 
-    m = run_level(cores, n_convs, runs, deadline=deadline)
-    batches = 1
-    # a re-batch costs ≥2 more runs of this leg's observed wall: only
-    # spend it when that much budget actually remains (the round-5
-    # deadline check gated on "any time left", which let a re-batch
-    # start at T-minus-nothing and blow the bench's wall cap), and never
-    # below the 300 s run_level refuses to start an attempt under
-    while (not _consistent(m["walls"]) and batches < max_batches
-           and time.monotonic() + max(300, 2.5 * min(m["walls"])) < deadline):
-        try:
-            extra = run_level(cores, n_convs, max(2, runs // 2),
-                              deadline=deadline)
-        except Exception as e:  # noqa: BLE001 — keep the walls measured so far
-            m = dict(m, rebatch_error=f"{type(e).__name__}: {str(e)[:200]}")
-            break
-        m = _merge(m, extra)
-        batches += 1
-    return m
+    spark = get_spark(f"scaling_leg_{cores}", master=f"local[{cores}]")
+    inp = spark.read.parquet(src)
+    n_turns = inp.count()
+    # a small full pipeline run (dedupe exchange included) so JIT,
+    # codegen and Python-worker forks are not in the timed runs
+    build_triples(inp.limit(20000)).count()
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        n_triples = build_triples(inp).count()
+        walls.append(time.perf_counter() - t0)
+    wall = statistics.median(walls)
+    return {"cores": cores, "n_convs": n_convs, "n_turns": n_turns,
+            "n_triples": n_triples, "wall_sec": round(wall, 2),
+            "walls": [round(w, 2) for w in walls],
+            "triples_per_sec": round(n_triples / wall, 1)}
 
 
-def _merge(a: dict, b: dict) -> dict:
-    """Pool the walls of two measurement passes of the same leg and keep
-    the min-wall estimate (the standard noisy-shared-host estimator —
-    every sample stays recorded in `walls`)."""
-    walls = a["walls"] + b["walls"]
-    best = min(walls)
-    out = dict(a)
-    out.update(wall_sec=round(best, 2), walls=walls,
-               triples_per_sec=round(a["n_triples"] / best, 1),
-               turns_per_sec=round(a["n_turns"] / best, 1))
-    return out
-
-
-GEN = r"""
-import hashlib, os, sys
-sys.path.insert(0, {repo!r})
-from glean_cetaf_rdfs_spark.session import get_spark, _scratch_dir
-from glean_cetaf_rdfs_spark.data.synthetic import transcripts_df, gen_conversation
-n_convs = {n_convs}
-tag = hashlib.md5(str(gen_conversation(0)).encode()).hexdigest()[:8]
-path = _scratch_dir() + f"/scaling_transcripts_{n_convs}_{{tag}}.parquet"
-if not os.path.exists(path + "/_SUCCESS"):
-    spark = get_spark("gen")  # cores from the host (get_spark's default)
-    transcripts_df(spark, n_convs, partitions=128).write.mode("overwrite").parquet(path)
-print("generated")
-"""
-
-
-def main() -> None:
-    # 320k convs (~4.9M turns): sized so the 4N leg runs long enough
-    # that fixed per-stage costs (scheduling, Python-worker forks, the
-    # dedupe exchange setup) AND the host's multi-minute noise bursts
-    # amortize — at 96k fixed costs ate ~15% of the short leg's wall
-    # (round-2 artifact 0.746 vs calm-window 0.9+), and at 192k the
-    # round-3 measurements still swung 0.66-1.1 between invocations
-    # (lo-leg walls 196-491 s for identical code+input). 320k measured
-    # 0.907 (r1) / 0.919 (r2) locally but the round-4 DRIVER run failed
-    # at 0.777 under a sustained noisy neighbor → default raised to
-    # 480k (bench.py passes it explicitly) plus the calm-host gate and
-    # per-leg consistency batching above.
-    # the argv size is treated as an upper bound and capped (round 6):
-    # bench.py (frozen for measurement) passes 480k, which made the full
-    # bench overrun the driver's wall cap — see SCALING_CONVS_CAP above
-    n_convs = effective_convs(int(sys.argv[1]) if len(sys.argv) > 1 else 480000)
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    # first full-size run in a JVM is up to ~2x slower even after the
-    # small warm run (measured; JIT of full-size paths) → every leg is
-    # best-of-N inside one subprocess
-    runs_lo = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    # the lo leg is highly stable at this input size (±0.2% measured);
-    # the hi leg carries the variance → one extra sample there
-    runs_hi = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    import time
-
-    t_gen = time.monotonic()
-    # pre-generate the input with all cores — generation is fixture prep,
-    # not part of either measured leg
-    subprocess.run([sys.executable, "-c", GEN.format(repo=str(REPO), n_convs=n_convs)],
-                   capture_output=True, text=True, timeout=3600, check=True)
-    print(json.dumps({"detail": "gen_done",
-                      "wall_s": round(time.monotonic() - t_gen, 1)}),
-          file=sys.stderr, flush=True)
-
-    t_start = time.monotonic()
-    # the TOTAL budget (round 6): sized so headline + scaling fit the
-    # driver's 3600 s per-invocation cap — the r5 run died at 3601 s
-    # with the final line unprinted; 5000 s here only fit bench.py's own
-    # 7200 s subprocess watchdog, not the cap that actually applies
-    deadline = t_start + SCALING_BUDGET_S
-    policy = ("calm-host gate (/proc/stat) before each leg; "
-              "min-wall per leg, re-batched until the two "
-              "smallest walls agree within 5%; interleaved "
-              "re-measure of both legs once if under target")
-    # leg ORDER and per-leg budgets (round-6, second pass): the HIGH leg
-    # runs FIRST under a sub-deadline of 40% of the budget. It is ~3.5×
-    # cheaper than the low leg, so it always lands; the expensive low
-    # leg then gets everything that remains. The previous lo-first order
-    # let a noisy window re-batch the low leg into ~2100 s of walls and
-    # starve the high leg entirely (observed: hi TimeoutExpired ×2, the
-    # whole scaling block lost, on a run where the host ran ~2× slow).
-    # Each leg soft-fails INDEPENDENTLY: one leg's death records an
-    # error but never erases the other leg's evidence.
-    lo = hi = None
-    errs: list[str] = []
+def run_leg(cores: int, n_convs: int, runs: int, src: str,
+            timeout_s: float) -> dict:
+    """``leg`` in a fresh JVM (one SparkSession per JVM), in its own
+    process group. Past ``timeout_s`` the whole group is killed: the
+    leg's Python, its JVM and the JVM's Python workers. A Python worker
+    that dies mid-stream leaves the JVM parked on the worker socket
+    forever (BENCH.md), and killing the leg's Python alone would leave
+    that JVM holding its heap. Never raises: a failed leg returns its
+    error next to empty walls, so it cannot erase the other leg."""
+    argv = [sys.executable, "-m", "tools.bench_scaling", "--leg",
+            str(cores), str(n_convs), str(runs), src]
+    proc = subprocess.Popen(argv, cwd=REPO, stdout=subprocess.PIPE,
+                            stderr=subprocess.PIPE, text=True,
+                            start_new_session=True)
     try:
-        hi = measure_leg(4 * n, n_convs, runs_hi,
-                         min(deadline, t_start + 0.4 * SCALING_BUDGET_S))
-        print(json.dumps({"detail": "leg_done", "cores": 4 * n,
-                          "walls": hi["walls"],
-                          "t": round(time.monotonic() - t_start, 1)}),
-              file=sys.stderr, flush=True)
-    except Exception as e:  # noqa: BLE001 — SOFT-fail, see above
-        errs.append(f"hi {type(e).__name__}: {str(e)[:200]}")
+        out, err = proc.communicate(timeout=max(timeout_s, 1.0))
+        if proc.returncode == 0:
+            return json.loads(out.strip().splitlines()[-1])
+        error = f"exit {proc.returncode}: {err.strip()[-300:]}"
+    except subprocess.TimeoutExpired:
+        error = f"timeout after {round(timeout_s)} s"
     try:
-        lo = measure_leg(n, n_convs, runs_lo, deadline)
-        print(json.dumps({"detail": "leg_done", "cores": n,
-                          "walls": lo["walls"],
-                          "t": round(time.monotonic() - t_start, 1)}),
+        os.killpg(proc.pid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass  # the group has already exited
+    proc.communicate()
+    return {"cores": cores, "n_convs": n_convs, "wall_sec": None,
+            "walls": [], "triples_per_sec": None, "error": error}
+
+
+def pair(src: str, n_convs: int, deadline: float) -> dict:
+    """Both legs on the input at ``src``: local[N] and local[4N], N a
+    quarter of this host's cores (local[1] and local[4] on 4 cores). The
+    4N leg runs first and may use half the time left to ``deadline``;
+    the N leg, ~4× as long, gets the rest. Each leg waits for a calm
+    host first."""
+    low = max(1, len(os.sched_getaffinity(0)) // 4)
+    legs = {}
+    for name, cores, share in (("high", 4 * low, 0.5), ("low", low, 1.0)):
+        busy = wait_for_calm(max_wait_s=60.0)
+        timeout = share * (deadline - time.monotonic())
+        legs[name] = dict(run_leg(cores, n_convs, RUNS, src, timeout),
+                          host_busy_before=busy)
+        print(json.dumps({"detail": "leg_done", "leg": legs[name]}),
               file=sys.stderr, flush=True)
-    except Exception as e:  # noqa: BLE001 — SOFT-fail, see above
-        errs.append(f"lo {type(e).__name__}: {str(e)[:200]}")
-    err = "; ".join(errs) if errs else None
-    if lo is not None and hi is not None:
+    lo, hi = legs["low"], legs["high"]
+    eff = None
+    if lo["triples_per_sec"] and hi["triples_per_sec"]:
         eff = round(hi["triples_per_sec"] / lo["triples_per_sec"] / 4, 3)
-        attempts = 1
-        # noisy-neighbor guard: if the consistent pair still lands under
-        # target, re-measure BOTH legs (interleaved in time) and pool
-        # walls — min-wall converges to the calm-window value for both
-        # legs symmetrically; every sample stays in the artifact.
-        # A failed re-measure (e.g. run_level's near-deadline refusal)
-        # keeps every wall that landed and stops re-measuring.
-        while eff < 0.8 and attempts < 2 and time.monotonic() < deadline - 1500:
-            try:
-                lo = _merge(lo, measure_leg(n, n_convs, runs_lo, deadline))
-                hi = _merge(hi, measure_leg(4 * n, n_convs, runs_hi, deadline))
-            except Exception as e:  # noqa: BLE001 — SOFT-fail, see above
-                errs.append(f"re-measure {type(e).__name__}: {str(e)[:200]}")
-                break
-            finally:
-                eff = round(hi["triples_per_sec"] / lo["triples_per_sec"] / 4, 3)
-            attempts += 1
-        print(json.dumps({"n_convs": n_convs, "low": lo, "high": hi,
-                          "scaling_efficiency": eff, "target": 0.8,
-                          "pass": eff >= 0.8, "measure_passes": attempts,
-                          "error": "; ".join(errs) or None,
-                          "policy": policy}))
-    else:
-        def _ph(cores: int) -> dict:
-            return {"cores": cores, "wall_sec": None,
-                    "triples_per_sec": None, "walls": []}
-
-        print(json.dumps({"n_convs": n_convs,
-                          "low": lo if lo is not None else _ph(n),
-                          "high": hi if hi is not None else _ph(4 * n),
-                          "scaling_efficiency": None, "target": 0.8,
-                          "pass": False, "measure_passes": 0,
-                          "error": err, "policy": policy}))
+    errors = [f"{k}: {v['error']}" for k, v in legs.items() if "error" in v]
+    return {"n_convs": n_convs, "low": lo, "high": hi,
+            "scaling_efficiency": eff, "target": TARGET,
+            "pass": eff is not None and eff >= TARGET,
+            "error": "; ".join(errors) or None,
+            "policy": f"calm-host gate before each leg; median of {RUNS} "
+                      "runs per leg; every wall recorded"}
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] != ["--leg"] or len(sys.argv) != 6:
+        sys.exit(__doc__)
+    cores, n_convs, runs = (int(a) for a in sys.argv[2:5])
+    print(json.dumps(leg(cores, n_convs, runs, sys.argv[5])), flush=True)

@@ -47,8 +47,8 @@ def main(names: list[str] | None = None) -> int:
     import __spark_entry__ as entrymod
     from glean_cetaf_rdfs_spark.session import get_spark
 
-    # cores and shuffle partitions from the host (get_spark's defaults)
-    spark = get_spark("compare", extra_conf={"spark.driver.memory": "8g"})
+    # cores, shuffle partitions and heap from the host (get_spark's defaults)
+    spark = get_spark("compare")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
