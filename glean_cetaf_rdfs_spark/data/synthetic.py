@@ -32,6 +32,8 @@ import pandas as pd
 from .dictionary import ENTITY_DICTIONARY
 
 GLOBAL_SEED = 42
+ZIPF_A = 1.6      # conversation length ~ 1 + zipf(ZIPF_A), within [2, MAX_TURNS]
+MAX_TURNS = 200
 EPOCH = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 
 ROLES = ["user", "assistant", "tool"]
@@ -150,10 +152,10 @@ def _mk_text(rng: np.random.RandomState, role: str, tool: str | None) -> str:
     return " ".join(parts)
 
 
-def gen_conversation(i: int, zipf_a: float = 1.6, max_turns: int = 200) -> list[dict]:
+def gen_conversation(i: int) -> list[dict]:
     """All turns of conversation ``i`` — pure, seeded, order-stable."""
     rng = np.random.RandomState(GLOBAL_SEED + i)
-    n_turns = int(min(max_turns, 1 + rng.zipf(zipf_a)))
+    n_turns = int(min(MAX_TURNS, 1 + rng.zipf(ZIPF_A)))
     if n_turns < 2:
         n_turns = 2
     conv_id = f"conv-{i:06d}"
@@ -176,10 +178,10 @@ def gen_conversation(i: int, zipf_a: float = 1.6, max_turns: int = 200) -> list[
     return rows
 
 
-def transcripts_pdf(n_convs: int, offset: int = 0) -> pd.DataFrame:
+def transcripts_pdf(n_convs: int) -> pd.DataFrame:
     """Driver-side generation (tests / oracle), identical rows to Spark path."""
     rows: list[dict] = []
-    for i in range(offset, offset + n_convs):
+    for i in range(n_convs):
         rows.extend(gen_conversation(i))
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")

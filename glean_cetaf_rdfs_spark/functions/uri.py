@@ -136,15 +136,20 @@ def url_domain_col(col: Column) -> Column:
     return F.substring_index(F.substring_index(after_scheme, "/", 1), ":", 1)
 
 
-def match_keys_py(url: str, max_path_segs: int = 3) -> list[str]:
+# deepest dictionary key: domain plus up to this many path segments; the
+# Python keys here and the Column keys of operators/link.py share it
+MAX_PATH_SEGS = 3
+
+
+def match_keys_py(url: str) -> list[str]:
     """Candidate dictionary keys for one URL: domain, then domain plus the
-    first 1..max_path_segs path segments (longest-prefix-wins matching of
+    first 1..MAX_PATH_SEGS path segments (longest-prefix-wins matching of
     the reference's path-scoped sed addresses, e.g. JACQ.sh:614-630)."""
     stripped = re.sub(r"^https?://", "", url)
     parts = stripped.split("/")
     domain = parts[0].split(":")[0]
     keys = [domain]
-    for k in range(1, min(max_path_segs, len(parts) - 1) + 1):
+    for k in range(1, min(MAX_PATH_SEGS, len(parts) - 1) + 1):
         seg = parts[k]
         if not seg or "?" in seg:
             break

@@ -62,13 +62,13 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _cc_driver(e: DataFrame, rows=None) -> DataFrame:
+def _cc_driver(e: DataFrame, rows: list) -> DataFrame:
     """Exact union-find on a driver-collected edge set — the small-graph
     fast path of :func:`connected_components`. Union-by-min + path
     compression, so every root is its component's minimum (the same
-    canonical the distributed fixpoint produces). ``rows`` lets the
-    caller hand over edges it already collected (the threshold probe) so
-    the whole fast path costs one Spark job."""
+    canonical the distributed fixpoint produces). ``rows`` are the edges
+    the threshold probe already collected, so the whole fast path costs
+    one Spark job."""
     from pyspark.sql.types import StructField, StructType
 
     spark = e.sparkSession
@@ -85,7 +85,7 @@ def _cc_driver(e: DataFrame, rows=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in (e.collect() if rows is None else rows):
+    for row in rows:
         ra, rb = find(row["src"]), find(row["dst"])
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
@@ -96,12 +96,16 @@ def _cc_driver(e: DataFrame, rows=None) -> DataFrame:
     return local_frame(spark, mapping, schema)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25,
+# star-round cap: the fixpoint converges in O(log²) rounds
+MAX_ROUNDS = 25
+
+
+def connected_components(edges: DataFrame,
                          checkpoint_dir: str | None = None,
                          driver_threshold: int = 200_000) -> DataFrame:
     """edges(src, dst) → (member, canonical) with canonical = component min.
 
-    Raises if not converged within ``max_iter`` rounds (the reference's
+    Raises if not converged within ``MAX_ROUNDS`` rounds (the reference's
     fixpoint sed loops get the same bounded-iteration treatment,
     SURVEY.md §7 "fixpoint encoders").
 
@@ -149,14 +153,14 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     if len(probe) <= driver_threshold:
         return _cc_driver(e, rows=probe)
     prev = _signature(e)
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         e = _ckpt(_dedup(_small_star(_large_star(e))))
         sig = _signature(e)
         if sig == prev:
             break
         prev = sig
     else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no fixpoint in {MAX_ROUNDS} rounds")
 
     # converged edge set is a star forest: (member → root). Roots map to
     # themselves so every component member appears exactly once.

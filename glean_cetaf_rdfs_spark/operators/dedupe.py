@@ -25,20 +25,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _join_build_side(df: DataFrame, scale_hints: bool) -> DataFrame:
-    """Join-strategy knob for the big×big self-joins below.
-
-    ``scale_hints=True`` is the corpus-scale contract: force sort-merge
-    (``merge`` hint) because both sides scale with the corpus and are
-    never broadcast candidates at 100 TB. At bench/test scale the same
-    hint makes Spark sort KB-sized build sides — measured +17 s on q18 at
-    sf0.1 in round 2 — so the default is ``shuffle_hash``: still a
-    shuffled (non-broadcast) plan with no driver-memory spike and no
-    sort, and the plan shape AQE would pick for mid-sized sides anyway.
-    """
-    return df.hint("merge" if scale_hints else "shuffle_hash")
-
-
 def exact_dedup_groups(df: DataFrame, id_col: str, key: Column) -> DataFrame:
     """Exact dedup by content hash: → (content_key, keep_id, n_copies).
     keep_id = min id per group (deterministic survivor pick)."""
@@ -77,8 +63,7 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                         threshold: float = 0.5,
-                        max_doc_freq: int | None = None,
-                        scale_hints: bool = False) -> DataFrame:
+                        max_doc_freq: int | None = None) -> DataFrame:
     """Exact pairwise Jaccard over word n-gram shingle sets:
     → (id_a, id_b, jaccard) for pairs ≥ threshold, id_a < id_b.
 
@@ -86,19 +71,21 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     this many docs before the self-join — they generate O(df²) candidate
     rows but cannot push Jaccard of dissimilar docs over a high
     threshold. None = exact (used for the oracle-checked query).
-    ``scale_hints``: see :func:`_join_build_side` — pass True at corpus
-    scale to force sort-merge on the self-joins.
+
+    The self-joins are hinted ``shuffle_hash``: a shuffled,
+    non-broadcast plan with no driver-memory spike and no sort. A
+    ``merge`` (sort-merge) hint cost +17 s on q18 at sf0.1 in round 2,
+    sorting KB-sized build sides.
     """
     sh = word_shingles(df, id_col, text_col, n)
     if max_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        sh = sh.join(_join_build_side(freq.filter(F.col("df_") <= max_doc_freq),
-                                      scale_hints),
-                     "shingle").drop("df_")
+        sh = sh.join(freq.filter(F.col("df_") <= max_doc_freq)
+                     .hint("shuffle_hash"), "shingle").drop("df_")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
-    common = (a.join(_join_build_side(b, scale_hints), "shingle")
+    common = (a.join(b.hint("shuffle_hash"), "shingle")
               .filter(F.col("id_a") < F.col("id_b"))
               .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_common")))
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
@@ -151,8 +138,7 @@ def band_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3,
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                       k: int = 8, bands: int = 4,
-                      verify_threshold: float = 0.5,
-                      scale_hints: bool = False) -> DataFrame:
+                      verify_threshold: float = 0.5) -> DataFrame:
     """MinHash + banded LSH blocking + exact-Jaccard verification.
 
     signature → ``bands`` bands of k/bands rows; docs sharing any band
@@ -164,10 +150,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     ca = banded.select(F.col("id").alias("id_a"), "band", "band_sig")
     cb = banded.select(F.col("id").alias("id_b"), "band", "band_sig")
     # banded stream and shingle stream scale with the corpus — never
-    # broadcast candidates at real scale; _join_build_side picks the
-    # shuffled strategy appropriate to the run (merge at corpus scale,
-    # shuffle-hash at bench/test scale)
-    cands = (ca.join(_join_build_side(cb, scale_hints), ["band", "band_sig"])
+    # broadcast candidates; shuffle-hash as in ngram_jaccard_pairs
+    cands = (ca.join(cb.hint("shuffle_hash"), ["band", "band_sig"])
              .filter(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b").distinct())
 
@@ -175,8 +159,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
-    common = (cands.join(_join_build_side(a, scale_hints), "id_a")
-              .join(_join_build_side(b, scale_hints), ["id_b", "shingle"])
+    common = (cands.join(a.hint("shuffle_hash"), "id_a")
+              .join(b.hint("shuffle_hash"), ["id_b", "shingle"])
               .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_common")))
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
@@ -223,18 +207,20 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return agg.select("id", fp.alias("simhash"))
 
 
+# simhash_near_pairs blocks on at most this many bit chunks: narrower
+# chunks make buckets too coarse and the join quadratic again
+MAX_SIMHASH_CHUNKS = 8
+
+
 def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
-                       max_hamming: int = 3,
-                       n_chunks: int | None = None) -> DataFrame:
+                       max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming, blocked
     on bit chunks: a pair within distance d shares at least one of
     ``n_chunks`` chunks whenever ``n_chunks > d`` (pigeonhole), so the
     self-join runs on chunk buckets, never a full cross product.
-    n_chunks defaults to max_hamming+1 (capped at 8 — narrower chunks
-    make buckets too coarse and the join quadratic again; for larger
-    distances recall becomes probabilistic). → (id_a, id_b, hamming)."""
-    if n_chunks is None:
-        n_chunks = min(8, max_hamming + 1)
+    n_chunks is max_hamming+1, capped at MAX_SIMHASH_CHUNKS; for larger
+    distances recall becomes probabilistic. → (id_a, id_b, hamming)."""
+    n_chunks = min(MAX_SIMHASH_CHUNKS, max_hamming + 1)
     if n_chunks <= max_hamming:
         import warnings
 
@@ -342,8 +328,8 @@ def _banded_sign_buckets(df: DataFrame, id_col: str, vec_col: str,
 
 def embedding_cosine_pairs_bucketed(df: DataFrame, id_col: str, vec_col: str,
                                     threshold: float = 0.95, *,
-                                    n_planes: int = 4, n_bands: int = 1,
-                                    dim: int | None = None) -> DataFrame:
+                                    n_planes: int = 4,
+                                    n_bands: int = 1) -> DataFrame:
     """Near-dup pairs with banded sign-LSH blocking — the shipped scale
     path replacing :func:`embedding_cosine_pairs`'s O(N²) cross product.
 
@@ -367,8 +353,7 @@ def embedding_cosine_pairs_bucketed(df: DataFrame, id_col: str, vec_col: str,
     numpy form is bit-identical (left-to-right cumsum) and milliseconds."""
     from .similarity import _dot, _norm, plane_weights
 
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+    dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
     planes = plane_weights(dim, n_bands * n_planes)
     withn = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                       _norm(F.col(vec_col)).alias("nrm"))

@@ -3,8 +3,9 @@ conditional literal rule (J2) as broadcast hash joins.
 
 The reference codegens its dictionary into ~380 lines of per-institution
 sed address blocks (convertRDF4import_normal-files_JACQ.sh:434-812,
-generated by generate_sed-expr4ROR-id.sh:98-169). Here the dictionary is a
-~40-row local-relation DataFrame broadcast to every task.
+generated by generate_sed-expr4ROR-id.sh:98-169). Here that one dictionary
+is ``data.dictionary.ENTITY_DICTIONARY``, a ~40-row local-relation
+DataFrame broadcast to every task; there is no caller-supplied dictionary.
 
 Longest-prefix matching is executed as **priority broadcast left-joins**:
 one candidate-key column per path depth (domain, domain/s1, …, deepest
@@ -29,12 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..data import vocab as V
-from ..data.dictionary import entity_dictionary_df
+from ..data.dictionary import ENTITY_DICTIONARY, entity_dictionary_df
 from ..functions.extraction_rules import P_COLLECTION_CODE
-from ..functions.uri import strip_scheme_col, url_domain_col
-
-LINK_COLS = ["entity", "canonical_id", "umbrella", "publisher", "add_conforms_to"]
-MAX_PATH_SEGS = 3
+from ..functions.uri import MAX_PATH_SEGS, strip_scheme_col, url_domain_col
 
 
 def mentions_of(triples: DataFrame) -> DataFrame:
@@ -60,23 +58,15 @@ def _candidate_keys(entity):
     return keys
 
 
-def link_entities(triples: DataFrame, dict_df: DataFrame | None = None) -> DataFrame:
+def link_entities(triples: DataFrame) -> DataFrame:
     """→ (entity, canonical_id, umbrella, publisher, add_conforms_to),
     one row per matched mention (dedupe happens at materialization)."""
-    spark = triples.sparkSession
-    literal_domains: list[str] | None = None
-    if dict_df is None:
-        dict_df = entity_dictionary_df(spark)
-        # the literal-rule domain list comes straight from the static
-        # dictionary. The default dictionary is a local relation, but the
-        # ``distinct().collect()`` below would still run an aggregate job
-        # at PLAN-BUILD time, once per pipeline construction, for a list
-        # already sitting in driver memory
-        from ..data.dictionary import ENTITY_DICTIONARY
-
-        literal_domains = sorted({k.split("|", 1)[0]
-                                  for kind, k, *_ in ENTITY_DICTIONARY
-                                  if kind == "literal_cond"})
+    dict_df = entity_dictionary_df(triples.sparkSession)
+    # the literal-rule domains come straight from the static dictionary,
+    # a list already in driver memory: no plan-build-time collect job
+    literal_domains = sorted({k.split("|", 1)[0]
+                              for kind, k, *_ in ENTITY_DICTIONARY
+                              if kind == "literal_cond"})
 
     mentions = mentions_of(triples)
 
@@ -109,9 +99,6 @@ def link_entities(triples: DataFrame, dict_df: DataFrame | None = None) -> DataF
         .withColumn("dom", F.split("match_key", r"\|").getItem(0))
         .withColumn("code", F.split("match_key", r"\|").getItem(1))
     )
-    if literal_domains is None:  # caller-supplied dictionary: read it
-        literal_domains = [r["dom"]
-                           for r in literal_dict.select("dom").distinct().collect()]
     codes = (triples.filter(F.col("pred") == P_COLLECTION_CODE)
              .select(F.col("subj").alias("turn"), F.col("obj").alias("code")))
     literal_links = (

@@ -4,8 +4,8 @@ columns with typed metadata.
 The Spark-side machinery — schema, partitioning, Arrow batch shape, UDF
 signatures — is real and tested; the actual codec work is stubbed behind
 ``FakeCodec`` (deterministic, derived from the payload bytes) because no
-image/audio libraries ship in this container. Swapping in Pillow/ffmpeg
-is a one-function change (`decode_fn`), nothing in the plan changes.
+image/audio libraries ship with the package. Swapping in Pillow/ffmpeg
+replaces the one ``FakeCodec.decode`` call; nothing in the plan changes.
 
 Design points for 100 TB:
 * payloads stay in executor memory only batch-at-a-time (``mapInPandas``
@@ -71,7 +71,7 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_metadata(assets: DataFrame, decode_fn=FakeCodec.decode) -> DataFrame:
+def extract_metadata(assets: DataFrame) -> DataFrame:
     """Arrow-batched metadata extraction: one asset row in → EXACTLY one
     metadata row out. Byte-level facts (n_bytes, sha256) are computed
     unconditionally; decode-derived fields (dims/duration) are null when
@@ -90,7 +90,7 @@ def extract_metadata(assets: DataFrame, decode_fn=FakeCodec.decode) -> DataFrame
                         "width": None, "height": None, "channels": None,
                         "duration_ms": None}
                 try:
-                    base.update(decode_fn(payload, r.kind))
+                    base.update(FakeCodec.decode(payload, r.kind))
                 except (ValueError, TypeError):
                     pass  # decode failure → null decode fields
                 rows.append(base)

@@ -8,7 +8,7 @@ gates on these before any model-based scoring.
 
 Reference parity: the reference hard-codes the repeated spans it strips
 (P6 boilerplate excision, fixRDF_before_validate.sh:330-345); this
-module MEASURES repetition per document so the gate can decide, the
+module MEASURES repetition per document so a gate can decide, the
 same measure-then-act split as operators/spandedup.py at corpus level.
 
 All signals are built-in JVM expressions over one explode + one
@@ -29,8 +29,8 @@ public stacks):
   occurrence of each duplicated n-gram contributes its full character
   length, so heavily self-overlapping repeats can push the fraction
   past 1.0 (e.g. "spam spam spam ..."). Overlap-aware coverage is
-  exactly what operators/spandedup.py computes when you need it; the
-  gate here wants a monotone repetition score, where overlap-naive is
+  exactly what operators/spandedup.py computes when you need it; a
+  gate wants a monotone repetition score, where overlap-naive is
   both cheaper (no interval union) and MORE sensitive.
 """
 
@@ -41,14 +41,12 @@ from pyspark.sql import functions as F
 
 from .spandedup import shingle_positions
 
-# Gopher Table A1 thresholds (the subset whose signals this module
-# computes; keys are repetition_signals output columns).
-GOPHER_THRESHOLDS: dict[str, float] = {
-    "dup_line_frac": 0.30,
-    "dup_line_char_frac": 0.20,
-    "top_ngram_char_frac": 0.20,   # Gopher: 0.20 for 2-grams
-    "dup_ngram_char_frac": 0.15,   # Gopher: 0.15 for 5-grams
-}
+# repetition_signals' widths and line unit: the top 2-gram and the
+# duplicated 5-grams (the widths of Gopher Table A1's 0.20 and 0.15
+# thresholds), lines split on newlines
+TOP_N = 2
+DUP_N = 5
+LINE_SEP = "\n"
 
 
 def _line_counts(df: DataFrame, id_col: str, text_col: str,
@@ -96,8 +94,8 @@ def line_repetition(df: DataFrame, id_col: str, text_col: str,
 
     Plan: explode(split) → groupBy(id, line) → groupBy(id). Both
     aggregations take map-side partials; docs with no non-empty lines
-    still get a row (left join back to ids, zero-filled) so the gate's
-    clean ∪ quarantined = input contract survives empty/NULL text."""
+    still get a row (left join back to ids, zero-filled), so every
+    input doc has a row even for empty/NULL text."""
     ids = df.select(F.col(id_col).alias("id"))
     return (ids.join(_line_counts(df, id_col, text_col, sep), "id", "left")
             .fillna(0, ["n_lines", "n_dup_lines", "n_line_chars",
@@ -210,11 +208,9 @@ def _ngram_stats_fused(df: DataFrame, id_col: str, text_col: str,
                        .otherwise(0)).alias("dup_ngram_chars")))
 
 
-def repetition_signals(df: DataFrame, id_col: str, text_col: str,
-                       top_n: int = 2, dup_n: int = 5,
-                       line_sep: str = "\n") -> DataFrame:
+def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The Gopher-style per-document repetition profile: line duplicate
-    fractions plus top-``top_n``-gram and duplicated-``dup_n``-gram
+    fractions plus top-``TOP_N``-gram and duplicated-``DUP_N``-gram
     character fractions. → (id, n_chars, n_lines, dup_line_frac,
     dup_line_char_frac, top_ngram_char_frac, dup_ngram_char_frac),
     fractions rounded to 4 dp, zero-line/short docs → 0.0 (not NULL),
@@ -222,13 +218,11 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
     is 0.0 unless the top n-gram occurs ≥2× (see inline note).
 
     Gopher computes the n-gram families at several widths; this returns
-    one width per family per call (the widths drive separate shingle
-    scans regardless — callers needing more join further calls on id).
-    Character fractions use length(text) as the denominator, so line
+    one width per family. Character fractions use length(text) as the denominator, so line
     separators count toward the whole like they do in the paper."""
     n_chars = F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long")
     base = df.select(F.col(id_col).alias("id"), n_chars.alias("n_chars"))
-    lines = _line_counts(df, id_col, text_col, line_sep)
+    lines = _line_counts(df, id_col, text_col, LINE_SEP)
     # a top n-gram occurring ONCE covers most of any short document —
     # pure length noise, not repetition; like the public Gopher-rule
     # reimplementations, the fraction counts the top n-gram only when
@@ -236,7 +230,7 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
     # numbers for profiling). Both n-gram widths come from one fused
     # tokenize+window pass (_ngram_stats_fused); line units explode
     # separately, and the absent-row zero-fill happens once here.
-    grams = _ngram_stats_fused(df, id_col, text_col, top_n, dup_n)
+    grams = _ngram_stats_fused(df, id_col, text_col, TOP_N, DUP_N)
 
     def frac(num, den):
         return F.round(F.coalesce(num, F.lit(0))
@@ -253,40 +247,3 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
                     .alias("top_ngram_char_frac"),
                     frac(F.col("dup_ngram_chars"), F.col("n_chars"))
                     .alias("dup_ngram_char_frac")))
-
-
-def repetition_gate(df: DataFrame, id_col: str, text_col: str,
-                    thresholds: dict[str, float] | None = None,
-                    top_n: int = 2, dup_n: int = 5,
-                    line_sep: str = "\n") -> tuple[DataFrame, DataFrame]:
-    """Split (clean, quarantined) on the Gopher repetition rules: a doc
-    is quarantined when ANY signal exceeds its threshold. Same contract
-    as piiscan.pii_gate: both sides keep the input schema and clean ∪
-    quarantined = input exactly (empty/NULL text has every signal 0 →
-    clean). ``thresholds`` maps repetition_signals columns to maxima;
-    ``None`` selects :data:`GOPHER_THRESHOLDS`; unknown keys raise.
-
-    Unlike the pii gate (pure per-row predicate, inlined into both
-    filtered scans), repetition signals aggregate over exploded units,
-    so the split is one signals computation joined back to the input —
-    an (id)-keyed shuffle join, not a broadcast; both sides share the
-    signal plan and Spark reuses the exchange under AQE."""
-    th = GOPHER_THRESHOLDS if thresholds is None else thresholds
-    known = {"dup_line_frac", "dup_line_char_frac",
-             "top_ngram_char_frac", "dup_ngram_char_frac"}
-    bad_keys = set(th) - known
-    if bad_keys:
-        raise ValueError(f"repetition_gate: unknown signal(s) {sorted(bad_keys)}; "
-                         f"known: {sorted(known)}")
-    sig = repetition_signals(df, id_col, text_col, top_n=top_n,
-                             dup_n=dup_n, line_sep=line_sep)
-    flag = F.lit(False)
-    for col, mx in sorted(th.items()):
-        flag = flag | (F.col(col) > mx)
-    flagged = sig.select("id", flag.alias("_rep_bad"))
-    joined = df.join(flagged.withColumnRenamed("id", id_col), id_col, "left")
-    keep = df.columns
-    return (joined.filter(~F.coalesce(F.col("_rep_bad"), F.lit(False)))
-            .select(*keep),
-            joined.filter(F.coalesce(F.col("_rep_bad"), F.lit(False)))
-            .select(*keep))

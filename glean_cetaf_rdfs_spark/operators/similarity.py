@@ -21,11 +21,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LSH_SEED = 42
+IVF_ITERS = 8  # Lloyd iterations of the IVF quantizer
 
 
-def plane_weights(dim: int, n_planes: int, seed: int = LSH_SEED) -> list[list[int]]:
+def plane_weights(dim: int, n_planes: int) -> list[list[int]]:
     """Deterministic integer hyperplane weights in [-8, 8] (seeded)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(LSH_SEED)
     return rng.randint(-8, 9, size=(n_planes, dim)).tolist()
 
 
@@ -98,33 +99,29 @@ def probe_buckets(query: list[float], planes: list[list[int]],
 
 def lsh_bucket_topk(df: DataFrame, id_col: str, vec_col: str,
                     query: list[float], k: int = 10,
-                    n_planes: int = 4, n_probe: int = 1) -> DataFrame:
+                    n_planes: int = 4) -> DataFrame:
     """Approximate top-k: restrict the exact scoring to the query's LSH
-    bucket(s). → (id, cos). Recall is tested against cosine_topk in the
-    suite; more planes ⇒ smaller buckets ⇒ cheaper + lower recall, and
-    ``n_probe > 1`` probes margin-ordered neighbor buckets too
-    (:func:`probe_buckets`) to buy recall back without touching the
-    write layout. Buckets are computed on the fly (full scan) — the
-    pre-materialized path is :func:`write_bucketed_embeddings` +
+    bucket. → (id, cos). Recall is tested against cosine_topk in the
+    suite; more planes ⇒ smaller buckets ⇒ cheaper + lower recall.
+    Buckets are computed on the fly (full scan) — the pre-materialized
+    path, with multi-probe, is :func:`write_bucketed_embeddings` +
     :func:`bucketed_table_topk`."""
     planes = plane_weights(len(query), n_planes)
     bucketed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                          lsh_bucket_of(F.col(vec_col), planes).alias("bucket"))
-    probes = probe_buckets(query, planes, n_probe)
+    probes = probe_buckets(query, planes)
     return _scored_topk(bucketed.filter(F.col("bucket").isin(probes)),
                         query, k)
 
 
 def write_bucketed_embeddings(df: DataFrame, id_col: str, vec_col: str,
-                              path: str, n_planes: int = 4,
-                              dim: int | None = None) -> None:
+                              path: str, n_planes: int = 4) -> None:
     """Materialize the ANN bucket table: (id, v) written
     ``partitionBy("bucket")`` — the 100 TB path. Bucketing is paid ONCE
     at write; every probe afterwards reads a single partition directory
     (Catalyst partition pruning — ``PartitionFilters`` in the scan),
     i.e. ~N/2^planes rows instead of a full scan."""
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+    dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
     planes = plane_weights(dim, n_planes)
     (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                lsh_bucket_of(F.col(vec_col), planes).alias("bucket"))
@@ -149,8 +146,8 @@ def _check_sample_n(op: str, sample_n: int) -> None:
 # --- IVF-style ANN (coarse quantizer + probed list) ------------------------
 
 def ivf_centroids(df: DataFrame, id_col: str, vec_col: str,
-                  k_centroids: int = 8, sample_n: int = 256,
-                  iters: int = 8, seed: int = LSH_SEED) -> dict[int, list[float]]:
+                  k_centroids: int = 8,
+                  sample_n: int = 256) -> dict[int, list[float]]:
     """Trained coarse quantizer: seeded k-means (k-means++ init + Lloyd)
     over a deterministic sample, centroids rounded to 6 decimals for
     engine portability (the frozen-VALUES oracle embeds them verbatim).
@@ -171,7 +168,7 @@ def ivf_centroids(df: DataFrame, id_col: str, vec_col: str,
     if not len(x):  # empty input → no lists (probes return empty)
         return {}
     k = min(k_centroids, len(x))
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(LSH_SEED)
     # k-means++ seeding (deterministic: seeded rng, argmax/argmin ties to
     # the first index)
     centers = [x[int(rng.randint(len(x)))]]
@@ -180,7 +177,7 @@ def ivf_centroids(df: DataFrame, id_col: str, vec_col: str,
         probs = d2 / d2.sum() if d2.sum() > 0 else np.full(len(x), 1.0 / len(x))
         centers.append(x[int(rng.choice(len(x), p=probs))])
     c = np.array(centers)
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         for j in range(k):

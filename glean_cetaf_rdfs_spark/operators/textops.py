@@ -6,6 +6,7 @@ Arrow-batched pandas stage.
 
 from __future__ import annotations
 
+import re
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -37,9 +38,12 @@ def token_count(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+# accuracy of corpus_stats' approx_percentile sketch (Spark's default)
+APPROX_ACCURACY = 10000
+
+
 def corpus_stats(df: DataFrame, id_col: str, text_col: str,
-                 exact: bool = True,
-                 approx_accuracy: int = 10000) -> DataFrame:
+                 exact: bool = True) -> DataFrame:
     """Per predicted language: doc count, mean token count, p50/p90
     token counts — the corpus profile curation decisions read.
 
@@ -57,9 +61,9 @@ def corpus_stats(df: DataFrame, id_col: str, text_col: str,
         p90 = F.percentile("n_tokens", F.lit(0.9))
     else:
         p50 = F.approx_percentile("n_tokens", F.lit(0.5),
-                                  F.lit(approx_accuracy))
+                                  F.lit(APPROX_ACCURACY))
         p90 = F.approx_percentile("n_tokens", F.lit(0.9),
-                                  F.lit(approx_accuracy))
+                                  F.lit(APPROX_ACCURACY))
     return (toks.join(lang, "id")
             .groupBy("lang_pred")
             .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -149,46 +153,38 @@ BPE_VOCAB: list[str] = [
 ]
 
 
-def bpe_pattern(vocab: list[str] | None = None) -> str:
-    """Regex encoding greedy longest-match tokenization: alternation
-    sorted longest-first (Python/Java regex alternation is
-    leftmost-FIRST, so longest-first ordering makes each match the
-    longest vocab piece at the cursor — exactly the greedy subword
-    scan), with a single-char fallback. Counting non-overlapping
-    matches IS the token count, at C speed — no per-character Python
-    loop."""
-    import re
-
-    pieces = sorted((vocab or BPE_VOCAB), key=len, reverse=True)
-    return "|".join(re.escape(p) for p in pieces) + "|[\\s\\S]"
+# Regex encoding greedy longest-match tokenization: alternation sorted
+# longest-first (Python/Java regex alternation is leftmost-FIRST, so
+# longest-first ordering makes each match the longest vocab piece at the
+# cursor — exactly the greedy subword scan), with a single-char fallback.
+# Counting non-overlapping matches IS the token count, at C speed — no
+# per-character Python loop.
+BPE_PATTERN = "|".join(re.escape(p) for p in
+                       sorted(BPE_VOCAB, key=len, reverse=True)) + "|[\\s\\S]"
 
 
-def bpe_count_py(text: str, vocab: list[str] | None = None) -> int:
+def bpe_count_py(text: str) -> int:
     """Pure-Python reference encoder (drives the frozen q49 oracle and
     the drift guard)."""
-    import re
-
-    return len(re.findall(bpe_pattern(vocab), text or ""))
+    return len(re.findall(BPE_PATTERN, text or ""))
 
 
-def bpe_token_count(df: DataFrame, id_col: str, text_col: str,
-                    vocab: list[str] | None = None) -> DataFrame:
+def bpe_token_count(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Tokenizer-real subword counts: greedy longest-match against a
     shared vocabulary, replacing :func:`token_count`'s chars/4 estimate
     for token-budget queries. → (id, n_bpe_tokens).
 
-    The compiled pattern ships to executors once per task via the
-    closure (the vocab is KBs; a production-sized 50k-merge vocab would
-    ride ``sparkContext.broadcast`` instead — same contract). Counting
-    runs inside the existing Arrow batch stage via the pandas
-    vectorized ``str.count``."""
-    pat = bpe_pattern(vocab)
+    Each Python worker reads the pattern from this module (the vocab
+    is KBs; a production-sized 50k-merge vocab would ride
+    ``sparkContext.broadcast`` instead — same contract). Counting runs
+    inside the existing Arrow batch stage via the pandas vectorized
+    ``str.count``."""
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame({
                 "id": pdf[id_col],
-                "n_bpe_tokens": pdf[text_col].fillna("").str.count(pat)
+                "n_bpe_tokens": pdf[text_col].fillna("").str.count(BPE_PATTERN)
                 .astype("int64"),
             })
 

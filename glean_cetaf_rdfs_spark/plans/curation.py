@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.piiscan import pii_gate
 from ..operators.spandedup import remove_repeated_spans
 from ..operators.textops import quality_counts
-from ..session import local_frame, stage_scratch_path
+from ..session import stage_scratch_path
 
 
 # md5(NULL) is NULL; a NULL fingerprint would fall out of the equi-join
@@ -49,10 +49,7 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", *,
                   k: int = 5, min_docs: int = 2,
                   pii_max_hits: int = 0, min_tokens: int = 5,
-                  max_punct_permille: int = 100,
-                  contamination_canaries: list[str] | None = None,
-                  repetition_thresholds: dict[str, float] | None = None,
-                  ) -> tuple[DataFrame, DataFrame]:
+                  max_punct_permille: int = 100) -> tuple[DataFrame, DataFrame]:
     """→ (curated, funnel).
 
     ``curated``: (id, source, text_clean) — survivors of all four
@@ -74,20 +71,7 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     plus ``curated`` scans the files. The PII regex scan, the dedup
     shuffle, and the span rewrite each execute EXACTLY once no matter
     how many consumers run — the round-4 lazy funnel re-executed the
-    span stage per aggregate (a 4-5× corpus recompute at scale).
-
-    Opt-in gates (both ``None``-off by default, preserving the q51
-    oracle funnel): ``contamination_canaries`` inserts the literal
-    benchmark-contamination gate (operators/piiscan.contamination_gate)
-    right after the PII gate — another pure-predicate filtered scan, so
-    the two compose into the same scan region; adds funnel stage
-    ``01b_decontaminated``. ``repetition_thresholds`` appends the
-    Gopher repetition gate (operators/repetition.repetition_gate; pass
-    ``repetition.GOPHER_THRESHOLDS`` for the published defaults — here
-    ``None`` means the stage is OFF, not default-thresholds) AFTER the quality
-    gate, on the span-rewritten text (repetition is a property of the
-    text that would actually ship); adds funnel stage
-    ``05_repetition_pass``."""
+    span stage per aggregate (a 4-5× corpus recompute at scale)."""
     spark = docs.sparkSession
     src_cols = [F.col(id_col).alias("id"), F.col("source"),
                 F.col(text_col)]
@@ -95,25 +79,7 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
 
     pii_clean, _quarantined = pii_gate(base, text_col,
                                        max_hits=pii_max_hits)
-    clean0 = pii_clean
-    obs01 = None
-    if contamination_canaries is not None:
-        from ..operators.piiscan import contamination_gate
-
-        # the funnel's 01 count must be PRE-contamination, but the
-        # materialized fp files are post-both-gates; an Observation
-        # between the two filters counts the pii-clean rows on the fp
-        # write itself — no second regex pass over the corpus (the
-        # module's each-stage-executes-once invariant)
-        import uuid
-
-        from pyspark.sql.observation import Observation
-
-        obs01 = Observation(f"pii01_{uuid.uuid4().hex}")
-        pii_clean = pii_clean.observe(obs01, F.count(F.lit(1)).alias("n"))
-        clean0, _contam = contamination_gate(pii_clean, "id", text_col,
-                                             canaries=contamination_canaries)
-    fp = clean0.withColumn(
+    fp = pii_clean.withColumn(
         "_fp", F.coalesce(F.md5(text_col), F.lit(_NULL_FP)))
 
     stage_base = stage_scratch_path(spark, "curation")
@@ -138,30 +104,18 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                       * max_punct_permille)
                      & (F.col("n_tokens") >= min_tokens))
              .select("id", "source", "text_clean"))
-    final = gated
-    if repetition_thresholds is not None:
-        from ..operators.repetition import repetition_gate
-
-        final, _rep_bad = repetition_gate(gated, "id", "text_clean",
-                                          thresholds=repetition_thresholds)
 
     # Funnel branches read the materialized stages: 00 is a raw-input
     # count (no regex), 01/02 are footer-cheap counts of the stage files
     # (the span rewrite preserves rows, so the staged count IS the
     # post-dedup count), 03/04 are single filtered scans of the staged
-    # files. With the contamination gate ON, the materialized fp files
-    # are post-BOTH-gates; 01 comes from the Observation captured on the
-    # fp write (zero extra passes).
-    if obs01 is None:
-        row01 = (fp.agg(F.count(F.lit(1)).alias("n"))
-                 .select(F.lit("01_pii_clean").alias("stage"), "n"))
-    else:
-        row01 = local_frame(spark, [("01_pii_clean", int(obs01.get["n"]))],
-                            "stage string, n long")
+    # files.
     funnel = (
         base.agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit("00_input").alias("stage"), "n")
-        .unionByName(row01)
+        .unionByName(
+            fp.agg(F.count(F.lit(1)).alias("n"))
+            .select(F.lit("01_pii_clean").alias("stage"), "n"))
         .unionByName(
             staged.agg(F.count(F.lit(1)).alias("n"))
             .select(F.lit("02_unique").alias("stage"), "n"))
@@ -173,20 +127,12 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
             gated.agg(F.count(F.lit(1)).alias("n"))
             .select(F.lit("04_quality_pass").alias("stage"), "n"))
     )
-    if contamination_canaries is not None:
-        funnel = funnel.unionByName(
-            fp.agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("01b_decontaminated").alias("stage"), "n"))
-    if repetition_thresholds is not None:
-        funnel = funnel.unionByName(
-            final.agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("05_repetition_pass").alias("stage"), "n"))
-    return final, funnel
+    return gated, funnel
 
 
 def run_curation(spark, docs: DataFrame, out_path: str, *,
-                 lineage_path: str | None = None, run_id: str = "curate",
-                 **curate_kwargs) -> DataFrame:
+                 lineage_path: str | None = None,
+                 run_id: str = "curate") -> DataFrame:
     """Materialize the curated corpus and account for it — the curation
     analog of ``run_pipeline`` (plans/pipeline.py): write the survivors
     partitioned by source, and when ``lineage_path`` is given append one
@@ -196,29 +142,20 @@ def run_curation(spark, docs: DataFrame, out_path: str, *,
     stage rewrites text without dropping rows, so it reports
     dropped=0; its token accounting lives in the funnel/q51). Returns
     the written table."""
-    curated, funnel = curate_corpus(docs, **curate_kwargs)
+    curated, funnel = curate_corpus(docs)
     curated.write.mode("overwrite").partitionBy("source").parquet(out_path)
     if lineage_path is not None:
         from ..streaming.checkpoint import append_lineage
 
         f = {r["stage"]: r["n"] for r in funnel.collect()}
-        # consecutive count-stage pairs become lineage rows; the two
-        # opt-in gates (01b / 05) slot in when present
-        stage_names = {"01_pii_clean": "pii_gate",
-                       "01b_decontaminated": "contamination_gate",
-                       "02_unique": "exact_dedup",
-                       "04_quality_pass": "quality_gate",
-                       "05_repetition_pass": "repetition_gate"}
-        chain = [(s, f[s]) for s in
-                 ("00_input", "01_pii_clean", "01b_decontaminated",
-                  "02_unique", "04_quality_pass", "05_repetition_pass")
-                 if s in f]
-        rows = []
-        for (_, n0), (s1, n1) in zip(chain, chain[1:]):
-            rows.append((stage_names[s1], "all", n0, n1, n0 - n1))
-            if s1 == "02_unique":
-                # span rewrite preserves rows; its token accounting
-                # lives in the funnel/q51
-                rows.append(("span_rewrite", "all", n1, n1, 0))
-        append_lineage(spark, lineage_path, run_id, rows)
+        n_in, n_pii, n_uniq, n_qual = (f[s] for s in (
+            "00_input", "01_pii_clean", "02_unique", "04_quality_pass"))
+        append_lineage(spark, lineage_path, run_id, [
+            ("pii_gate", "all", n_in, n_pii, n_in - n_pii),
+            ("exact_dedup", "all", n_pii, n_uniq, n_pii - n_uniq),
+            # span rewrite preserves rows; its token accounting lives in
+            # the funnel/q51
+            ("span_rewrite", "all", n_uniq, n_uniq, 0),
+            ("quality_gate", "all", n_uniq, n_qual, n_uniq - n_qual),
+        ])
     return spark.read.parquet(out_path)

@@ -33,7 +33,7 @@ from ..operators.materialize import finalize_triples
 from ..session import stage_scratch_path
 
 
-def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
+def build_triples(transcripts: DataFrame,
                   metrics: dict | None = None) -> DataFrame:
     """Plan for the final deduped (graph, subj, pred, obj, obj_is_iri).
 
@@ -80,7 +80,7 @@ def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
     ent_canonical, _ = split_canonical(annotated.filter(F.col("sect") == "m"))
     ent_spo = ent_canonical.select("subj", "pred", "obj", "obj_is_iri")
     _, sameas = split_canonical(annotated.filter(F.col("sect") != "o"))
-    links = link_entities(ent_spo, dict_df)
+    links = link_entities(ent_spo)
     events = event_entities(ent_spo)
     generated = enrich_triples(ent_spo, links, events)
     all_triples = (spo
@@ -94,7 +94,6 @@ def build_triples(transcripts: DataFrame, dict_df: DataFrame | None = None,
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
-                 dict_df: DataFrame | None = None,
                  lineage_path: str | None = None,
                  run_id: str = "batch",
                  quarantine_path: str | None = None) -> DataFrame:
@@ -128,7 +127,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_path: str,
         obs_gate = Observation(f"gate_{uuid.uuid4().hex}")
         transcripts = transcripts.observe(obs_gate,
                                           F.count(F.lit(1)).alias("n"))
-    final = build_triples(transcripts, dict_df, metrics=metrics)
+    final = build_triples(transcripts, metrics=metrics)
     if lineage_path is not None:
         obs_final = Observation(f"final_{uuid.uuid4().hex}")
         final = final.observe(obs_final, F.count(F.lit(1)).alias("n"))

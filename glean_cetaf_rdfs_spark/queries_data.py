@@ -439,6 +439,9 @@ def q36_ann_bucket_scan(spark, sf_dir):
                                  n_planes=4)
 
 
+Q40_N_PROBE = 3  # q40 probes the query's bucket + 2 one-bit flips
+
+
 def q40_lsh_multiprobe_topk(spark, sf_dir):
     """Multi-probe sign-LSH top-k against the materialized bucket table:
     the query's bucket plus the 2 nearest margin-ordered 1-bit-flip
@@ -448,10 +451,10 @@ def q40_lsh_multiprobe_topk(spark, sf_dir):
     (margin, plane) tie-break)."""
     path = _bucket_table_path(spark, sf_dir)
     return S.bucketed_table_topk(spark, path, _query_vec(spark, sf_dir), k=10,
-                                 n_planes=4, n_probe=3)
+                                 n_planes=4, n_probe=Q40_N_PROBE)
 
 
-def sql_q40(dim: int, n_probe: int = 3) -> str:
+def sql_q40(dim: int) -> str:
     planes = S.plane_weights(dim, 4)
     return f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
@@ -468,7 +471,7 @@ probes AS (
          || substr(b, CAST(j AS INT) + 2),
          abs(s), CAST(j AS INT)
   FROM base, proj),
-sel AS (SELECT bucket FROM probes ORDER BY m, j LIMIT {n_probe}),
+sel AS (SELECT bucket FROM probes ORDER BY m, j LIMIT {Q40_N_PROBE}),
 bk AS (SELECT vec_id,
               string_agg(CASE WHEN list_dot_product(embedding, w::DOUBLE[]) > 0
                               THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
@@ -1374,9 +1377,9 @@ def q55_repetition_signals(spark, sf_dir):
     """Gopher-rule repetition profile per document: duplicate-line
     fractions plus top-2-gram / duplicated-5-gram character fractions
     (operators/repetition.py — one explode + two partial-aggregating
-    groupBys per signal family, all JVM built-ins). The per-doc signals
-    the repetition_gate thresholds; fractions are ratios of exact
-    integer counts rounded once at the end (the q44 convention)."""
+    groupBys per signal family, all JVM built-ins). Fractions are
+    ratios of exact integer counts rounded once at the end (the q44
+    convention)."""
     from .operators.repetition import repetition_signals
 
     return (repetition_signals(_docs(spark, sf_dir), "doc_id", "text")

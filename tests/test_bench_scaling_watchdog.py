@@ -46,21 +46,34 @@ def test_legs_read_the_same_input(leg_input, monkeypatch):
     lo, hi = res["low"], res["high"]
     assert res["error"] is None, res
     assert hi["cores"] == 4 * lo["cores"]
+    # each leg ran pinned to as many CPUs as its local[N] has cores
+    assert lo["cpus"] == lo["cores"] and hi["cpus"] == hi["cores"]
     assert lo["n_turns"] == hi["n_turns"] > 0
     assert lo["n_triples"] == hi["n_triples"] > 0
     assert len(lo["walls"]) == len(hi["walls"]) == BS.RUNS
     assert res["scaling_efficiency"] > 0
 
 
+def _leg_scratch(pid: int) -> str:
+    """``SPARK_GRAFT_LOCAL_DIR`` in the environment of process ``pid``."""
+    with open(f"/proc/{pid}/environ", "rb") as f:
+        env = dict(kv.split(b"=", 1) for kv in f.read().split(b"\0") if b"=" in kv)
+    return env[b"SPARK_GRAFT_LOCAL_DIR"].decode()
+
+
 def test_leg_timeout_kills_its_jvm(leg_input, monkeypatch):
     """A leg past its timeout is killed with its whole process group, the
     JVM included (a JVM parked on a dead Python worker's socket never
-    exits by itself), and the leg returns the error with no walls."""
+    exits by itself), and the leg returns the error with no walls. The
+    leg's own Spark scratch directory, which its killed exit cleanup
+    never removes, is gone too."""
     seen = {}
     killpg = os.killpg
 
     def spy(pgid, sig):
         seen["pgid"], seen["before"] = pgid, _group_exes(pgid)
+        seen["scratch"] = _leg_scratch(pgid)
+        seen["scratch_existed"] = os.path.isdir(seen["scratch"])
         killpg(pgid, sig)
 
     monkeypatch.setattr(BS.os, "killpg", spy)
@@ -73,6 +86,9 @@ def test_leg_timeout_kills_its_jvm(leg_input, monkeypatch):
             break
         time.sleep(0.1)
     assert _group_exes(seen["pgid"]) == []
+    assert seen["scratch_existed"], seen
+    assert os.environ.get("SPARK_GRAFT_LOCAL_DIR") != seen["scratch"]
+    assert not os.path.exists(seen["scratch"])
 
 
 def _leg_dies(dead, order):

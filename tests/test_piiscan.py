@@ -44,8 +44,7 @@ def test_pii_gate_split_and_schema(spark):
 
 def test_pii_null_text_and_empty_patterns(spark):
     """NULL text rows count 0 hits and land on the CLEAN side — the gate
-    contract is clean + quarantined = input exactly. patterns={} means
-    no rules (everything clean); only None selects the defaults."""
+    contract is clean + quarantined = input exactly."""
     df = spark.createDataFrame(
         [(1, None), (2, "mail me a@b.co")],
         "doc_id long, text string")
@@ -55,13 +54,15 @@ def test_pii_null_text_and_empty_patterns(spark):
     assert {r["doc_id"] for r in clean.collect()} == {1}
     assert {r["doc_id"] for r in bad.collect()} == {2}
     assert clean.count() + bad.count() == df.count()
-    clean_all, bad_none = P.pii_gate(df, "text", patterns={})
-    assert clean_all.count() == 2 and bad_none.count() == 0
     scan = P.contamination_scan(df, "doc_id", "text", ["a@b"]).collect()
     assert {r["id"]: r["n_canary_hits"] for r in scan} == {1: 0, 2: 1}
 
 
 def test_contamination_literal_counts(spark):
+    """Literal occurrence counts; the empty-canary guard fails fast
+    instead of silently NULLing counts."""
+    import pytest
+
     df = spark.createDataFrame(
         [(1, "the eval canary phrase appears twice: eval canary phrase"),
          (2, "no overlap with anything held out"),
@@ -72,6 +73,8 @@ def test_contamination_literal_counts(spark):
                                 ["eval canary phrase", ".*[chars]"]).collect()}
     # literal matching — regex metacharacters in canaries are inert
     assert got == {1: 2, 2: 0, 3: 2}
+    with pytest.raises(ValueError, match="empty"):
+        P.contamination_scan(df, "doc_id", "text", ["ok phrase", "  "])
 
 
 def test_curate_corpus_end_to_end(spark):
@@ -173,141 +176,3 @@ def test_curate_corpus_single_pass_plan(spark):
     assert {(r["stage"], r["n"]) for r in funnel.collect()} == {
         ("00_input", 8), ("01_pii_clean", 8), ("02_unique", 8),
         ("03_span_tokens_removed", 0), ("04_quality_pass", 8)}
-
-
-def test_contamination_table_matches_literal_path(spark):
-    """On whitespace-clean text the broadcast eval-shingle table path
-    (the 100 TB shape) agrees with the literal-canary path exactly, the
-    join side is broadcast, and zero-hit docs survive with 0. The
-    empty-canary guard fails fast instead of silently NULLing counts."""
-    import pytest
-
-    docs = spark.createDataFrame(
-        [(1, "merge batch then merge batch again soon"),
-         (2, "query value appears just once here today"),
-         (3, "nothing held out in this one at all")],
-        "doc_id long, text string")
-    canaries = ["merge batch", "query value"]
-    lit = {r["id"]: r["n_canary_hits"] for r in
-           P.contamination_scan(docs, "doc_id", "text", canaries).collect()}
-    ev = spark.createDataFrame([(c,) for c in canaries], "sh string")
-    tbl_df = P.contamination_scan_table(docs, "doc_id", "text", ev, k=2)
-    tbl = {r["id"]: r["n_canary_hits"] for r in tbl_df.collect()}
-    assert tbl == lit == {1: 2, 2: 1, 3: 0}
-    plan = tbl_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    with pytest.raises(ValueError, match="empty"):
-        P.contamination_scan(docs, "doc_id", "text", ["ok phrase", "  "])
-
-
-def test_contamination_table_multi_width(spark):
-    """Mixed-width eval table: per-width scans sum per doc; docs with
-    zero hits stay present; empty eval table yields all zeros."""
-    docs = spark.createDataFrame(
-        [(1, "merge batch then run the full query value sweep now"),
-         (2, "query value appears here and merge batch too"),
-         (3, "nothing held out")],
-        "doc_id long, text string")
-    ev = spark.createDataFrame(
-        [("merge batch",), ("query value sweep",)], "sh string")
-    got = {r["id"]: r["n_canary_hits"] for r in
-           P.contamination_scan_table_multi(docs, "doc_id", "text",
-                                            ev).collect()}
-    assert got == {1: 2, 2: 1, 3: 0}   # doc1: both widths; doc2: 2-gram only
-    empty = spark.createDataFrame([], "sh string")
-    z = {r["id"]: r["n_canary_hits"] for r in
-         P.contamination_scan_table_multi(docs, "doc_id", "text",
-                                          empty).collect()}
-    assert z == {1: 0, 2: 0, 3: 0}
-
-
-def test_contamination_gate_literal_path(spark):
-    """Literal-canary gate: inline predicate, both sides keep schema,
-    NULL text is clean, threshold is a knob."""
-    df = spark.createDataFrame(
-        [(1, "the eval canary phrase appears twice: eval canary phrase"),
-         (2, "no overlap with anything held out"),
-         (3, None)],
-        "doc_id long, text string")
-    clean, bad = P.contamination_gate(df, "doc_id", "text",
-                                      canaries=["eval canary phrase"])
-    assert clean.columns == df.columns == bad.columns
-    assert {r["doc_id"] for r in bad.collect()} == {1}
-    assert {r["doc_id"] for r in clean.collect()} == {2, 3}
-    # tolerate a single hit: the twice-hit doc still fails at max_hits=1
-    clean1, bad1 = P.contamination_gate(df, "doc_id", "text",
-                                        canaries=["eval canary phrase"],
-                                        max_hits=1)
-    assert {r["doc_id"] for r in bad1.collect()} == {1}
-    clean2, bad2 = P.contamination_gate(df, "doc_id", "text",
-                                        canaries=["eval canary phrase"],
-                                        max_hits=2)
-    assert bad2.count() == 0 and clean2.count() == 3
-
-
-def test_contamination_gate_table_path_and_arg_contract(spark):
-    import pytest
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"),
-         (2, "nothing shared here at all"),
-         (3, None)],
-        "doc_id long, text string")
-    ev = spark.createDataFrame([("alpha beta",), ("gamma delta epsilon",)],
-                               "sh string")
-    clean, bad = P.contamination_gate(df, "doc_id", "text",
-                                      eval_shingles=ev)
-    assert {r["doc_id"] for r in bad.collect()} == {1}
-    assert {r["doc_id"] for r in clean.collect()} == {2, 3}
-    assert clean.columns == df.columns == bad.columns
-    with pytest.raises(ValueError, match="exactly one"):
-        P.contamination_gate(df, "doc_id", "text")
-    with pytest.raises(ValueError, match="exactly one"):
-        P.contamination_gate(df, "doc_id", "text",
-                             canaries=["x y"], eval_shingles=ev)
-    with pytest.raises(ValueError, match="empty or whitespace-only"):
-        P.contamination_gate(df, "doc_id", "text", canaries=["  "])
-
-
-def test_curate_corpus_optional_gates(spark, tmp_path):
-    """Opt-in contamination + repetition stages: each fires on its
-    planted doc, funnel gains 01b/05 with truthful counts, and the
-    lineage chain keeps the rows_in == rows_out + rows_dropped
-    invariant across all six stages."""
-    from glean_cetaf_rdfs_spark.operators.repetition import GOPHER_THRESHOLDS
-    from glean_cetaf_rdfs_spark.plans.curation import curate_corpus, run_curation
-
-    rows = [
-        (1, "s0", "plain unique survivor document with enough words here"),
-        (2, "s0", "contains the held out eval phrase inside this text"),
-        (3, "s1", "spam spam spam spam spam spam spam spam spam spam"),
-        (4, "s1", "write to bob@mail.example.org for details please now"),
-        (5, "s2", "another perfectly ordinary document with plenty words"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    curated, funnel = curate_corpus(
-        df, "doc_id", "text", min_tokens=5,
-        contamination_canaries=["held out eval phrase"],
-        repetition_thresholds=GOPHER_THRESHOLDS)
-    f = {r["stage"]: r["n"] for r in funnel.collect()}
-    assert f["00_input"] == 5
-    assert f["01_pii_clean"] == 4          # PII doc 4 quarantined
-    assert f["01b_decontaminated"] == 3    # canary doc 2 dropped
-    assert f["04_quality_pass"] == 3       # repeat doc passes punct/len gate
-    assert f["05_repetition_pass"] == 2    # ...but trips the Gopher rules
-    assert {r["id"] for r in curated.collect()} == {1, 5}
-
-    lineage = str(tmp_path / "lineage")
-    run_curation(spark, df, str(tmp_path / "out"), lineage_path=lineage,
-                 min_tokens=5,
-                 contamination_canaries=["held out eval phrase"],
-                 repetition_thresholds=GOPHER_THRESHOLDS)
-    lrows = spark.read.parquet(lineage).collect()
-    stages = {r["stage"] for r in lrows}
-    assert {"pii_gate", "contamination_gate", "exact_dedup",
-            "span_rewrite", "quality_gate", "repetition_gate"} <= stages
-    for r in lrows:
-        assert r["rows_in"] == r["rows_out"] + r["rows_dropped"], r
-    by_stage = {r["stage"]: r for r in lrows}
-    assert by_stage["contamination_gate"]["rows_dropped"] == 1
-    assert by_stage["repetition_gate"]["rows_dropped"] == 1

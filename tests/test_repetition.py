@@ -1,6 +1,5 @@
 """Gopher-style repetition signal tests: hand-computed planted docs,
-full DuckDB oracle parity on the fixture corpus, and the quarantine
-gate contract."""
+and full DuckDB oracle parity on the fixture corpus."""
 
 from __future__ import annotations
 
@@ -146,23 +145,6 @@ def test_repetition_signals_duckdb_parity(spark):
                 (int(w["id"]), col)
 
 
-def test_repetition_gate_contract(spark):
-    df = _planted(spark)
-    clean, bad = R.repetition_gate(df, "doc_id", "text")
-    assert clean.columns == df.columns == bad.columns
-    # doc 2 trips every n-gram rule; doc 1's repeated "alpha beta"
-    # bigram (20/56 chars) trips the top-2-gram rule; NULL text and the
-    # short doc (top bigram occurs once → 0.0) are clean
-    assert {r["doc_id"] for r in bad.collect()} == {1, 2}
-    assert {r["doc_id"] for r in clean.collect()} == {3, 4}
-    # single-rule thresholds: only the dup-line signal quarantines doc 1
-    _, bad2 = R.repetition_gate(df, "doc_id", "text",
-                                thresholds={"dup_line_frac": 0.4})
-    assert {r["doc_id"] for r in bad2.collect()} == {1}
-    with pytest.raises(ValueError, match="unknown signal"):
-        R.repetition_gate(df, "doc_id", "text", thresholds={"nope": 0.1})
-
-
 def test_top_ngram_tiebreak_deterministic(spark):
     """All bigrams unique (count 1): the argmax must tiebreak by
     (chars, sh), not partition order — repartitioning cannot change
@@ -188,6 +170,3 @@ def test_paragraph_level_variant(spark):
     line = R.line_repetition(df, "doc_id", "text").collect()[0]
     # line-level sees the same units here plus no extra dups
     assert line["n_dup_lines"] == 2
-    sig = R.repetition_signals(df, "doc_id", "text",
-                               line_sep="\n\n").collect()[0]
-    assert sig["dup_line_frac"] == 0.5

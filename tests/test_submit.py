@@ -15,7 +15,7 @@ REPO = Path(__file__).resolve().parents[1]
 
 
 def test_spark_submit_ships_with_pyfiles(tmp_path):
-    from glean_cetaf_rdfs_spark.session import package_zip
+    from glean_cetaf_rdfs_spark.session import host_facts, package_zip
 
     submit = shutil.which("spark-submit")
     if submit is None:
@@ -26,7 +26,7 @@ def test_spark_submit_ships_with_pyfiles(tmp_path):
     r = subprocess.run(
         [submit, "--master", "local[4]",
          "--py-files", zip_path,
-         "--conf", "spark.driver.memory=8g",
+         "--conf", f"spark.driver.memory={host_facts()['heap_mb']}m",
          "--conf", "spark.sql.shuffle.partitions=8",
          str(REPO / "tools" / "submit_job.py"), "40", out],
         capture_output=True, text=True, timeout=420, env=env, cwd=str(tmp_path))

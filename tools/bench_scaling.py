@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import signal
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -83,11 +85,22 @@ def pair_convs(sec_per_conv: float, time_left_s: float) -> int:
 
 
 def leg(cores: int, n_convs: int, runs: int, src: str) -> dict:
-    """One leg in this process: the KG job on the input at ``src``."""
-    from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
-    from glean_cetaf_rdfs_spark.session import get_spark
+    """One leg in this process: the KG job on the input at ``src``.
 
-    spark = get_spark(f"scaling_leg_{cores}", master=f"local[{cores}]")
+    Before the JVM starts, this process is pinned to the first ``cores``
+    CPUs it may run on; the JVM and its Python workers inherit the pin,
+    so ``local[1]`` uses one CPU. Unpinned, its GC and JIT threads and
+    its Arrow-fed Python worker kept 1.1-3.4 of 4 CPUs busy. Shuffle
+    partitions and heap come from the unpinned host, so both legs plan
+    the same job on the same heap."""
+    from glean_cetaf_rdfs_spark.plans.pipeline import build_triples
+    from glean_cetaf_rdfs_spark.session import get_spark, host_facts
+
+    host = host_facts()
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cores])
+    spark = get_spark(f"scaling_leg_{cores}", master=f"local[{cores}]",
+                      shuffle_partitions=host["nproc"],
+                      extra_conf={"spark.driver.memory": f"{host['heap_mb']}m"})
     inp = spark.read.parquet(src)
     n_turns = inp.count()
     # a small full pipeline run (dedupe exchange included) so JIT,
@@ -99,7 +112,8 @@ def leg(cores: int, n_convs: int, runs: int, src: str) -> dict:
         n_triples = build_triples(inp).count()
         walls.append(time.perf_counter() - t0)
     wall = statistics.median(walls)
-    return {"cores": cores, "n_convs": n_convs, "n_turns": n_turns,
+    return {"cores": cores, "cpus": len(os.sched_getaffinity(0)),
+            "n_convs": n_convs, "n_turns": n_turns,
             "n_triples": n_triples, "wall_sec": round(wall, 2),
             "walls": [round(w, 2) for w in walls],
             "triples_per_sec": round(n_triples / wall, 1)}
@@ -113,12 +127,25 @@ def run_leg(cores: int, n_convs: int, runs: int, src: str,
     that dies mid-stream leaves the JVM parked on the worker socket
     forever (BENCH.md), and killing the leg's Python alone would leave
     that JVM holding its heap. Never raises: a failed leg returns its
-    error next to empty walls, so it cannot erase the other leg."""
+    error next to empty walls, so it cannot erase the other leg.
+
+    The leg's scratch is a directory of its own, removed once the group
+    has exited or been killed: a killed leg never runs its own exit
+    cleanup, so its stage tables (``SPARK_GRAFT_LOCAL_DIR``) and its
+    JVM's block-manager files (``SPARK_LOCAL_DIRS``, which overrides
+    ``spark.local.dir``) would otherwise stay behind. Both variables
+    are set in the leg's env only."""
+    from glean_cetaf_rdfs_spark.session import _scratch_dir
+
+    scratch = tempfile.mkdtemp(prefix=f"scaling_leg{cores}_",
+                               dir=_scratch_dir())
     argv = [sys.executable, "-m", "tools.bench_scaling", "--leg",
             str(cores), str(n_convs), str(runs), src]
     proc = subprocess.Popen(argv, cwd=REPO, stdout=subprocess.PIPE,
                             stderr=subprocess.PIPE, text=True,
-                            start_new_session=True)
+                            start_new_session=True,
+                            env={**os.environ, "SPARK_GRAFT_LOCAL_DIR": scratch,
+                                 "SPARK_LOCAL_DIRS": scratch})
     try:
         out, err = proc.communicate(timeout=max(timeout_s, 1.0))
         if proc.returncode == 0:
@@ -126,11 +153,13 @@ def run_leg(cores: int, n_convs: int, runs: int, src: str,
         error = f"exit {proc.returncode}: {err.strip()[-300:]}"
     except subprocess.TimeoutExpired:
         error = f"timeout after {round(timeout_s)} s"
-    try:
-        os.killpg(proc.pid, signal.SIGKILL)
-    except ProcessLookupError:
-        pass  # the group has already exited
-    proc.communicate()
+    finally:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass  # the group has already exited
+        proc.communicate()
+        shutil.rmtree(scratch, ignore_errors=True)
     return {"cores": cores, "n_convs": n_convs, "wall_sec": None,
             "walls": [], "triples_per_sec": None, "error": error}
 
